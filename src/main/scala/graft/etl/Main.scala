@@ -101,16 +101,6 @@ object Main {
       cmd == "state") spark.stop()
   }
 
-  /** The state-lifecycle tables each pillar's health report covers. */
-  private val pillarTables: Map[String, Seq[String]] = Map(
-    "lsh" -> Seq("reps", "bands", "members", "tombstones"),
-    "postings" -> Seq("postings", "totals", "docs", "tombstones",
-      "tomb_totals", "positions"),
-    "tokenizer" -> Seq("merges", "doc_tokens", "tombstones"),
-    "stats" -> Seq("stats", "stats_deltas"),
-    "ivf" -> Seq("centroids", "cells", "tombstones"),
-    "fp" -> Seq("sigs", "bands", "tombstones"))
-
   /** `state <action> ...` — the OPERATOR surface for the persisted-state
     * lifecycle, so recovering a crashed swap or GC-ing a year of tagged
     * history doesn't require a Scala build mid-incident:
@@ -125,28 +115,30 @@ object Main {
     * state vacuum   <dir>                         # manifest-mode version GC
     * state export   tokenizer <dir> <out> --budget N [--bin-budget N]
     *                [--shards N] [--quality <parquet> --id-col c --quality-col c]
-    * state audit    <lsh> <postings> <tokenizer> [--asof-batch B --asof-delete D]
+    * state audit    <lsh> <postings> <tokenizer> [--asof-batch B [--asof-delete D]]
     * }}}
     *
-    * `pillar` ∈ lsh | postings | tokenizer | stats | ivf | fp. Every action
-    * is
-    * a thin dispatch onto the same public entry points the Scala API
-    * exposes — identical refusal messages, identical lease/marker
-    * discipline. Results print as tables; `audit` with zero rows prints
-    * the consistent verdict explicitly. */
+    * `pillar` names a [[graft.ext.StatePillar]] (lsh | postings |
+    * tokenizer | stats | ivf | fp). The five lifecycle verbs are one call
+    * each onto that descriptor — the same entry points the Scala API
+    * exposes, with identical refusal messages and lease/marker
+    * discipline — and `health` reports the descriptor's `healthTables`.
+    * Results print as tables; `audit` with zero rows prints the
+    * consistent verdict explicitly, and `--asof-delete` without
+    * `--asof-batch` is a usage error. */
   def stateCmd(
       spark: SparkSession, positional: Seq[String], opts: Map[String, String],
       out: java.io.PrintStream): Unit = {
+    import graft.ext.StatePillar
     def usage(): Nothing = {
       out.println("usage: state recover|truncate|retain|clone|fastforward|health|" +
         "vacuum|audit|export ... (see scaladoc; pillar = " +
-        "lsh|postings|tokenizer|stats|ivf|fp)")
+        s"${StatePillar.names.mkString("|")})")
       throw new IllegalArgumentException("state: bad arguments")
     }
-    def pillar(p: String): String =
-      if (pillarTables.contains(p)) p
-      else { out.println(s"unknown pillar '$p' " +
-        s"(expected ${pillarTables.keys.toSeq.sorted.mkString("|")})"); usage() }
+    def pillar(p: String): StatePillar = StatePillar.get(p).getOrElse {
+      out.println(s"unknown pillar '$p' " +
+        s"(expected ${StatePillar.names.mkString("|")})"); usage() }
     // a non-numeric --floor/--keep-last/... gets the usage() error every
     // other malformed argument gets, not a bare NumberFormatException
     def longOpt(name: String, default: => String): Long =
@@ -159,48 +151,21 @@ object Main {
         out.println(s"--$name must be a number"); usage() }
     positional match {
       case Seq("recover", p, dir) =>
-        val rolled = pillar(p) match {
-          case "lsh" => graft.ext.Dedup.recoverLshState(spark, dir)
-          case "postings" => graft.ext.Index.recoverPostingsState(spark, dir)
-          case "tokenizer" => graft.ext.Bpe.recoverTokenizerState(spark, dir)
-          case "stats" => graft.ext.Profile.recoverStatsState(spark, dir)
-          case "ivf" => graft.ext.Similarity.recoverIvfState(spark, dir)
-          case "fp" => graft.ext.Dedup.recoverFpState(spark, dir)
-        }
-        out.println(if (rolled) s"[state] rolled a crashed swap forward in $dir"
+        out.println(if (pillar(p).recover(spark, dir))
+          s"[state] rolled a crashed swap forward in $dir"
           else s"[state] $dir is healthy — nothing to recover")
       case Seq("truncate", p, dir) =>
         val floor = longOpt("floor", usage())
-        pillar(p) match {
-          case "lsh" => graft.ext.Dedup.truncateLshHistory(spark, dir, floor)
-          case "postings" =>
-            graft.ext.Index.truncatePostingsHistory(spark, dir, floor)
-          case "tokenizer" =>
-            graft.ext.Bpe.truncateTokenizerHistory(spark, dir, floor)
-          case "stats" =>
-            graft.ext.Profile.truncateStatsHistory(spark, dir, floor)
-          case "ivf" => graft.ext.Similarity.truncateIvfHistory(spark, dir, floor)
-          case "fp" => graft.ext.Dedup.truncateFpHistory(spark, dir, floor)
-        }
+        pillar(p).truncate(spark, dir, floor)
         out.println(s"[state] collapsed history <= $floor in $dir")
       case Seq("clone", p, src, dst) =>
         val b = longOpt("asof-batch", usage())
         val d = longOpt("asof-delete", "0")
-        pillar(p) match {
-          case "lsh" => graft.ext.Dedup.cloneLshState(spark, src, dst, b, d)
-          case "postings" =>
-            graft.ext.Index.clonePostingsState(spark, src, dst, b, d)
-          case "tokenizer" =>
-            graft.ext.Bpe.cloneTokenizerState(spark, src, dst, b, d)
-          case "stats" =>
-            graft.ext.Profile.cloneStatsState(spark, src, dst, b, d)
-          case "ivf" => graft.ext.Similarity.cloneIvfState(spark, src, dst, b, d)
-          case "fp" => graft.ext.Dedup.cloneFpState(spark, src, dst, b, d)
-        }
+        pillar(p).clone(spark, src, dst, b, d)
         out.println(s"[state] branched $src at (append=$b, delete=$d) into $dst")
       case Seq("health", p, dir) =>
         val report = graft.ext.StateAudit.healthReport(spark, dir,
-          pillarTables(pillar(p)),
+          pillar(p).healthTables,
           maxVersions = intOpt("max-versions", "64"),
           maxFilesPerLeafDir = intOpt("max-files-per-leaf", "4"))
         report.collect().foreach { r =>
@@ -211,36 +176,14 @@ object Main {
         }
       case Seq("retain", p, dir) =>
         val keep = intOpt("keep-last", usage())
-        val applied = pillar(p) match {
-          case "lsh" => graft.ext.Dedup.retainLshHistory(spark, dir, keep)
-          case "postings" =>
-            graft.ext.Index.retainPostingsHistory(spark, dir, keep)
-          case "tokenizer" =>
-            graft.ext.Bpe.retainTokenizerHistory(spark, dir, keep)
-          case "stats" =>
-            graft.ext.Profile.retainStatsHistory(spark, dir, keep)
-          case "ivf" => graft.ext.Similarity.retainIvfHistory(spark, dir, keep)
-          case "fp" => graft.ext.Dedup.retainFpHistory(spark, dir, keep)
-        }
-        out.println(applied match {
+        out.println(pillar(p).retain(spark, dir, keep) match {
           case Some(f) => s"[state] retained last $keep: collapsed " +
             s"history <= $f in $dir"
           case None => s"[state] retention already satisfied in $dir — " +
             "nothing to collapse"
         })
       case Seq("fastforward", p, src, dst) =>
-        val (b, d) = pillar(p) match {
-          case "lsh" => graft.ext.Dedup.fastForwardLshState(spark, src, dst)
-          case "postings" =>
-            graft.ext.Index.fastForwardPostingsState(spark, src, dst)
-          case "tokenizer" =>
-            graft.ext.Bpe.fastForwardTokenizerState(spark, src, dst)
-          case "stats" =>
-            graft.ext.Profile.fastForwardStatsState(spark, src, dst)
-          case "ivf" =>
-            graft.ext.Similarity.fastForwardIvfState(spark, src, dst)
-          case "fp" => graft.ext.Dedup.fastForwardFpState(spark, src, dst)
-        }
+        val (b, d) = pillar(p).fastForward(spark, src, dst)
         out.println(s"[state] caught $dst up to $src's head " +
           s"(append=$b, delete=$d)")
       case Seq("vacuum", dir) =>
@@ -253,7 +196,7 @@ object Main {
       case Seq("export", p, dir, dst) =>
         // tokenizer-pillar only: the export rides the (id, bpe_tokens)
         // sidecar — other pillars have no token-budget semantics
-        if (pillar(p) != "tokenizer") {
+        if (pillar(p) != StatePillar.Tokenizer) {
           out.println(s"export only applies to the tokenizer pillar, " +
             s"got '$p'"); usage()
         }
@@ -279,15 +222,20 @@ object Main {
           s"at $dst (budget=$budget, bin=$binBudget)")
       case Seq("audit", ls, ps, ts) =>
         val divergent = (opts.get("asof-batch"), opts.get("asof-delete")) match {
-          case (Some(b), d) =>
+          case (Some(_), _) =>
+            val (b, d) = (longOpt("asof-batch", usage()),
+              longOpt("asof-delete", "0"))
             graft.ext.StateAudit.crossPillarConsistency(Seq(
-              "lsh" -> graft.ext.StateAudit.lshLiveIdsAsOf(spark, ls,
-                b.toLong, d.getOrElse("0").toLong),
+              "lsh" -> graft.ext.StateAudit.lshLiveIdsAsOf(spark, ls, b, d),
               "postings" -> graft.ext.StateAudit.postingsLiveIdsAsOf(spark,
-                ps, b.toLong, d.getOrElse("0").toLong),
+                ps, b, d),
               "tokenizer" -> graft.ext.StateAudit.tokenizerLiveIdsAsOf(spark,
-                ts, b.toLong, d.getOrElse("0").toLong)))
-          case _ =>
+                ts, b, d)))
+          case (None, Some(_)) =>
+            // a delete cut alone names no version: refuse rather than
+            // silently auditing the current state
+            out.println("--asof-delete needs --asof-batch"); usage()
+          case (None, None) =>
             graft.ext.StateAudit.crossPillarConsistency(Seq(
               "lsh" -> graft.ext.StateAudit.lshLiveIds(spark, ls),
               "postings" -> graft.ext.StateAudit.postingsLiveIds(spark, ps),
@@ -388,16 +336,7 @@ object Main {
       if (result.totalItems == 0) {
         println(s"[process] ${f.getFileName}: no records")
       } else {
-        Sinks.writeCsvSingleFile(result.frame, s"$outDir/cleaned_output.csv")
-        Sinks.writeSchemaJson(result.fieldStats, s"$outDir/dynamic_schema.json")
-        Sinks.writeMetadataJson(
-          Pipeline.RunMetadata(start, java.time.Instant.now().toString,
-            f.getFileName.toString, result.totalItems, result.itemsByType),
-          s"$outDir/processing_metadata.json")
-        if (useStore) sys.env.get("GRAFT_JDBC_URL") match {
-          case Some(url) => Sinks.appendStoreJdbc(result, f.getFileName.toString, url)
-          case None => Sinks.appendStore(result, f.getFileName.toString, s"$outDir/store")
-        }
+        Sinks.writeRun(result, outDir, f.getFileName.toString, start, useStore)
         println(s"[process] ${f.getFileName}: ${result.totalItems} records " +
           s"(${result.itemsByType.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(", ")})")
       }

@@ -13,6 +13,27 @@ import org.apache.spark.sql.types._
   */
 object Sinks {
 
+  /** One run's sinks, shared by the directory batch (`process`/`db`) and
+    * watch mode: CSV, schema and metadata overwrite under `outDir`; with
+    * `useStore` the result also appends to the store — Derby over JDBC
+    * when `GRAFT_JDBC_URL` is set, parquet under `outDir/store`
+    * otherwise. `filename` is the input's basename (comma-joined for a
+    * multi-file batch) in the metadata JSON and the store alike. */
+  def writeRun(
+      result: Pipeline.Result, outDir: String, filename: String,
+      startTime: String, useStore: Boolean): Unit = {
+    writeCsvSingleFile(result.frame, s"$outDir/cleaned_output.csv")
+    writeSchemaJson(result.fieldStats, s"$outDir/dynamic_schema.json")
+    writeMetadataJson(
+      Pipeline.RunMetadata(startTime, java.time.Instant.now().toString,
+        filename, result.totalItems, result.itemsByType),
+      s"$outDir/processing_metadata.json")
+    if (useStore) sys.env.get("GRAFT_JDBC_URL") match {
+      case Some(url) => appendStoreJdbc(result, filename, url)
+      case None => appendStore(result, filename, s"$outDir/store")
+    }
+  }
+
   /** S5 — single-file CSV with header (reference cleaned_output.csv,
     * etl_pipeline.py:290-292). Spark writes a part-file per partition; the
     * single-file contract needs coalesce(1) + rename. Array columns are

@@ -521,77 +521,6 @@ object Bpe {
     }
   }
 
-  /** HISTORY-RETENTION GC for an [[appendTokenizerState]] dir — the
-    * [[graft.ext.StateIO.truncateHistory]] core over the tokenizer
-    * pillar. Pure tag collapse: sidecar rows with `batch_id <= floor`
-    * re-tag to the base version (the merges FROZE on batch 1, so every
-    * version's `bpe_tokens` are the same unit — the re-tag moves
-    * partitions, never re-encodes), tombstones `delete_id <= floor`
-    * collapse and keep anti-joining at read time, so every still-legal
-    * as-of budget/mix/sample read (bounds ≥ floor —
-    * [[tokenBudgetFromStateAsOf]] et al.) returns bit-identical
-    * selections (the x142 gate). The frozen `merges` table and `_meta`
-    * are version-free and untouched. */
-  def truncateTokenizerHistory(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      floor: Long): Unit =
-    StateIO.truncateHistory(spark, dir, floor, Seq(
-      StateIO.TruncTable("doc_tokens", "batch_id"),
-      StateIO.TruncTable("tombstones", "delete_id", required = false)),
-      extraRemnantChecks = Seq("merges"))
-
-  /** Complete a crashed multi-table swap in an [[appendTokenizerState]]
-    * dir — the public roll-forward for a [[truncateTokenizerHistory]]
-    * that crashed after its `_swap_commit` marker published (until the
-    * marker clears, every append/delete/compact/truncate entry fails
-    * fast naming this call). Returns true iff a crashed swap was found
-    * and rolled forward; false = nothing to do (safe to call blindly). */
-  def recoverTokenizerState(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
-
-  /** BRANCH an [[appendTokenizerState]] dir at a version
-    * ([[graft.ext.StateIO.cloneStateAsOf]] over the tokenizer pillar):
-    * the clone's plain budget/mix/sample reads equal the source's
-    * as-of reads at (asOfBatch, asOfDelete); frozen `merges` and
-    * `_meta` raw-copy, so counts stay one unit across branch and
-    * source. */
-  def cloneTokenizerState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String, asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      tokenizerStateTables, rawCopies = tokenizerStateRawCopies)
-
-  /** KEEP-LAST-N retention for an [[appendTokenizerState]] dir — see
-    * [[graft.ext.Profile.retainStatsHistory]]. */
-  def retainTokenizerHistory(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches,
-      Seq("doc_tokens"))
-    f.foreach(truncateTokenizerHistory(spark, dir, _))
-    f
-  }
-
-  /** The tokenizer pillar's table topology + frozen artifacts — shared
-    * by [[cloneTokenizerState]] and [[fastForwardTokenizerState]]. */
-  private[ext] val tokenizerStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("doc_tokens", "batch_id"),
-    StateIO.TruncTable("tombstones", "delete_id", required = false))
-  private[ext] val tokenizerStateRawCopies: Seq[String] =
-    Seq("merges", "_meta")
-
-  /** Catch a [[cloneTokenizerState]] branch up to its source's current
-    * head ([[graft.ext.StateIO.fastForwardState]] over the tokenizer
-    * pillar); frozen `merges`/`_meta` must still be byte-identical (a
-    * retrained source counts in different units — re-clone). Returns
-    * the new (batch, delete) head. */
-  def fastForwardTokenizerState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, tokenizerStateTables,
-      rawCopies = tokenizerStateRawCopies)
-
   /** [[graft.ext.Sampling.tokenBudget]] answered from persisted encoded
     * counts: the budget prefix sum runs over the narrow (id, bpe_tokens)
     * sidecar joined to a caller-supplied (idCol, qualityCol) frame — the

@@ -791,81 +791,6 @@ object Dedup {
     }
   }
 
-  /** HISTORY-RETENTION GC for an [[appendLshState]] dir — the
-    * [[graft.ext.StateIO.truncateHistory]] core over the text pillar's
-    * four tagged tables. Pure tag collapse: every reps/bands/members row
-    * with `batch_id <= floor` re-tags to the base version `floor`
-    * (content byte-preserved — a batch-1 group's signature rows simply
-    * move partitions), tombstone partitions `delete_id <= floor`
-    * collapse likewise and KEEP subtracting at read time exactly as
-    * they did per-version, so every still-legal as-of read (bounds ≥
-    * floor) — [[incrementalLshPairsFromState]]'s cut included — returns
-    * bit-identical membership (the x139 gate). Physical tombstone
-    * application stays [[compactLshState]]'s job: group-level tables
-    * (reps/bands) need the surviving-member semi-join to decide what a
-    * delete kills, and truncation deliberately does NOT re-derive
-    * group liveness — it only bounds the partition history. `_meta`
-    * (signature parameters) is version-free and untouched. */
-  def truncateLshHistory(
-      spark: SparkSession, dir: String, floor: Long): Unit =
-    StateIO.truncateHistory(spark, dir, floor, Seq(
-      StateIO.TruncTable("reps", "batch_id"),
-      StateIO.TruncTable("bands", "batch_id"),
-      StateIO.TruncTable("members", "batch_id"),
-      StateIO.TruncTable("tombstones", "delete_id", required = false)))
-
-  /** Complete a crashed multi-table swap in an [[appendLshState]] dir —
-    * the public roll-forward for a [[truncateLshHistory]] that crashed
-    * after its `_swap_commit` marker published (until the marker
-    * clears, every append/delete/compact/truncate entry fails fast
-    * naming this call). Returns true iff a crashed swap was found and
-    * rolled forward to the full new fit; false = nothing to do (safe
-    * to call blindly from an orchestrator's recovery path). */
-  def recoverLshState(spark: SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
-
-  /** BRANCH an [[appendLshState]] dir at a version
-    * ([[graft.ext.StateIO.cloneStateAsOf]] over the text pillar): the
-    * clone is an independent state whose PLAIN reads answer exactly
-    * like the source's as-of reads at (asOfBatch, asOfDelete), and
-    * whose later appends/deletes/truncations leave the source
-    * untouched. `_meta` (signature parameters) raw-copies so the
-    * clone's band joins stay compatible with fresh signatures. */
-  def cloneLshState(
-      spark: SparkSession, srcDir: String, dstDir: String,
-      asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      lshStateTables, rawCopies = lshStateRawCopies)
-
-  /** KEEP-LAST-N retention for an [[appendLshState]] dir — see
-    * [[graft.ext.Profile.retainStatsHistory]]. */
-  def retainLshHistory(
-      spark: SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches, Seq("reps"))
-    f.foreach(truncateLshHistory(spark, dir, _))
-    f
-  }
-
-  /** The text pillar's table topology + frozen signature parameters —
-    * shared by [[cloneLshState]] and [[fastForwardLshState]]. */
-  private[ext] val lshStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("reps", "batch_id"),
-    StateIO.TruncTable("bands", "batch_id"),
-    StateIO.TruncTable("members", "batch_id"),
-    StateIO.TruncTable("tombstones", "delete_id", required = false))
-  private[ext] val lshStateRawCopies: Seq[String] = Seq("_meta")
-
-  /** Catch a [[cloneLshState]] branch up to its source's current head
-    * ([[graft.ext.StateIO.fastForwardState]] over the text pillar);
-    * `_meta` must still match the branch's copy (changed signature
-    * parameters would band incompatibly — re-clone). Returns the new
-    * (batch, delete) head. */
-  def fastForwardLshState(
-      spark: SparkSession, srcDir: String, dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, lshStateTables,
-      rawCopies = lshStateRawCopies)
-
   /** Shared state-dir compaction engine ([[compactLshState]],
     * [[Similarity.compactIvfState]], [[Profile.compactStatsState]],
     * [[Index.compactPostingsState]]): rewrite each `(table, dedup?)`
@@ -1118,7 +1043,7 @@ object Dedup {
     // fail fast during a crashed truncate's apply window (the contract
     // every state read shares): bands/reps/members move under one swap
     // commit, and reading a half-applied mix pairs new reps with old
-    // bands — run Dedup.recoverLshState first
+    // bands — run StatePillar.Lsh.recover first
     StateIO.checkNoSwapInProgress(spark, stateDir)
     // the batch's fresh signatures must be computed under the SAME
     // parameters as the state's persisted bands, or the band join finds
@@ -1867,17 +1792,6 @@ object Dedup {
     }
   }
 
-  /** The fingerprint pillar's table topology + frozen bucket meta —
-    * shared by the lifecycle wrappers below. `bands` preserves its `bkt`
-    * partition level below the batch tags everywhere (flattening it
-    * would silently turn the pruned probe reads into full scans). */
-  private[ext] val fpStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("sigs", "batch_id"),
-    StateIO.TruncTable("bands", "batch_id",
-      extraPartitionCols = Seq("bkt")),
-    StateIO.TruncTable("tombstones", "delete_id", required = false))
-  private[ext] val fpStateRawCopies: Seq[String] = Seq("_meta")
-
   /** Compact an [[appendFpState]] dir in place — the shared compaction
     * engine over the fingerprint pillar's tables, with tombstones
     * applied PHYSICALLY during the rewrite (sigs/bands drop deleted ids;
@@ -1899,46 +1813,6 @@ object Dedup {
       targetBytes, extraPartitionCols = Seq("bkt"),
       transforms = Map("sigs" -> dropTombed, "bands" -> dropTombed))
   }
-
-  /** HISTORY-RETENTION GC for an [[appendFpState]] dir — the shared
-    * [[graft.ext.StateIO.truncateHistory]] core over the fingerprint
-    * pillar (pure tag collapse; tombstones keep subtracting at read
-    * time; still-legal as-of reads return bit-identical pairs). */
-  def truncateFpHistory(
-      spark: SparkSession, dir: String, floor: Long): Unit =
-    StateIO.truncateHistory(spark, dir, floor, fpStateTables)
-
-  /** Complete a crashed multi-table swap in an [[appendFpState]] dir
-    * (see [[recoverLshState]]). */
-  def recoverFpState(spark: SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
-
-  /** KEEP-LAST-N retention for an [[appendFpState]] dir — see
-    * [[retainLshHistory]]. */
-  def retainFpHistory(
-      spark: SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches, Seq("sigs"))
-    f.foreach(truncateFpHistory(spark, dir, _))
-    f
-  }
-
-  /** BRANCH an [[appendFpState]] dir at a version (the shared
-    * [[graft.ext.StateIO.cloneStateAsOf]] core); `_meta` (bucket count)
-    * raw-copies so the clone's probe reads stay bucket-compatible. */
-  def cloneFpState(
-      spark: SparkSession, srcDir: String, dstDir: String,
-      asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      fpStateTables, rawCopies = fpStateRawCopies)
-
-  /** Catch a [[cloneFpState]] branch up to its source's current head
-    * ([[graft.ext.StateIO.fastForwardState]] over the fingerprint
-    * pillar). Returns the new (batch, delete) head. */
-  def fastForwardFpState(
-      spark: SparkSession, srcDir: String, dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, fpStateTables,
-      rawCopies = fpStateRawCopies)
 
   /** Eval-set decontamination: flag every corpus document sharing at least
     * one word `n`-gram with the eval set — the standard benchmark-leakage

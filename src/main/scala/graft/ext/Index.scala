@@ -543,8 +543,9 @@ object Index {
   }
 
   /** HISTORY-RETENTION GC for an [[appendPostingsState]] dir — the
-    * operator that BOUNDS what time-travel keeps: the tagged partitions
-    * the as-of reads cut ([[bm25TopKFromStateAsOf]]) are a full version
+    * postings pillar's [[StatePillar.truncate]], the operator that
+    * BOUNDS what time-travel keeps: the tagged partitions the as-of
+    * reads cut ([[bm25TopKFromStateAsOf]]) are a full version
     * history, which at production cadence means thousands of tiny
     * `batch_id=N` / `delete_id=N` partitions per year — unbounded
     * metadata AND an unbounded promise that every historical version
@@ -587,13 +588,12 @@ object Index {
     * (the data a year of appends accumulated — the same cost profile as
     * compaction, run at the same cadence); later partitions rewrite as
     * straight copies. Nothing collects to the driver. */
-  def truncatePostingsHistory(
+  private[ext] def collapsePostingsHistory(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       floor: Long): Unit =
       StateIO.withWriterLock(spark, dir) {
     StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("postings", "totals", "docs", "tombstones", "tomb_totals",
-        "positions"))
+      StatePillar.Postings.healthTables)
     val post = spark.read.parquet(StateIO.tablePath(spark, dir, "postings"))
     require(post.columns.contains("batch_id"),
       s"history truncation needs a TAGGED state: $dir/postings has no " +
@@ -685,71 +685,6 @@ object Index {
     StateIO.swapInTables(spark, dir, swaps)
   }
 
-  /** Complete a crashed multi-table swap in an [[appendPostingsState]]
-    * dir — the public roll-forward for a [[truncatePostingsHistory]]
-    * that crashed after its `_swap_commit` marker published (until the
-    * marker clears, every append/delete/compact/truncate entry fails
-    * fast naming this call). Returns true iff a crashed swap was found
-    * and rolled forward; false = nothing to do (safe to call blindly). */
-  def recoverPostingsState(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
-
-  /** BRANCH an [[appendPostingsState]] dir at a version
-    * ([[graft.ext.StateIO.cloneStateAsOf]] over the postings pillar,
-    * the x144 gate): the clone is an independent index whose PLAIN
-    * reads — [[bm25TopKFromState]], [[phraseSearchFromState]],
-    * [[hybridTopKFromState]]'s lexical leg — answer exactly like the
-    * source's as-of reads at (asOfBatch, asOfDelete): every tagged
-    * table lands with only its in-bound partitions (bucket pruning
-    * level preserved), and `tomb_totals` keeps only corrections
-    * attributed inside the batch cut, so the corpus constants stay the
-    * exact integers the as-of fold computes. Later appends, deletes,
-    * compactions, and truncations of the clone leave the source
-    * untouched — the what-if curation branch a production index needs. */
-  /** KEEP-LAST-N retention for an [[appendPostingsState]] dir — see
-    * [[graft.ext.Profile.retainStatsHistory]]. */
-  def retainPostingsHistory(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches, Seq("docs"))
-    f.foreach(truncatePostingsHistory(spark, dir, _))
-    f
-  }
-
-  /** The postings pillar's table topology — shared by
-    * [[clonePostingsState]] and [[fastForwardPostingsState]]. */
-  private[ext] val postingsStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("postings", "batch_id", Seq("bucket")),
-    StateIO.TruncTable("docs", "batch_id"),
-    StateIO.TruncTable("totals", "batch_id"),
-    StateIO.TruncTable("positions", "batch_id", Seq("bucket"),
-      required = false),
-    StateIO.TruncTable("tombstones", "delete_id", required = false),
-    StateIO.TruncTable("tomb_totals", "delete_id", required = false))
-
-  def clonePostingsState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String, asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      postingsStateTables)
-
-  /** Catch a [[clonePostingsState]] branch up to its source's current
-    * head ([[graft.ext.StateIO.fastForwardState]] over the postings
-    * pillar): the missing `batch_id` partitions copy individually
-    * (postings/docs/totals/positions — O(new batches), never O(branch)),
-    * the tombstone-sized delete tables rewrite wholesale, and the
-    * branch's `_branch` lineage advances — the incremental alternative
-    * to re-cloning a months-old branch. Diverged branches (local writes
-    * past the cut), a source that truncated past the branch point, and
-    * mid-crash states all refuse by name; a crashed catch-up gates
-    * every read until this is re-run. Returns the new (batch, delete)
-    * head. */
-  def fastForwardPostingsState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, postingsStateTables)
-
   /** [[bm25TopK]] answered from [[appendPostingsState]] parquet —
     * output-identical to the batch path over the same corpus (ExtSpec
     * pins it; x110 pins the values on x53's oracle): the tf rows come
@@ -814,9 +749,9 @@ object Index {
       val floor = StateIO.readHistoryFloor(spark, dir)
       require(bt >= floor && dt >= floor,
         s"as-of ($bt, $dt) is below $dir's history floor $floor — " +
-          "versions at or below the floor were collapsed by " +
-          "truncatePostingsHistory and can no longer be separated; " +
-          "only bounds >= the floor are answerable")
+          "versions at or below the floor were collapsed by history " +
+          "truncation (state truncate postings) and can no longer be " +
+          "separated; only bounds >= the floor are answerable")
     }
     // corpus constants = append totals + (negative) delete corrections —
     // exact integer sums over |batches| + |deletes| rows
@@ -924,8 +859,9 @@ object Index {
       val floor = StateIO.readHistoryFloor(spark, dir)
       require(bt >= floor && dt >= floor,
         s"as-of ($bt, $dt) is below $dir's history floor $floor — " +
-          "versions at or below the floor were collapsed by " +
-          "truncatePostingsHistory and can no longer be separated")
+          "versions at or below the floor were collapsed by history " +
+          "truncation (state truncate postings) and can no longer be " +
+          "separated")
     }
     val pos = StateIO.readTableIfExists(spark, dir, "positions").getOrElse(
       throw new IllegalStateException(

@@ -405,77 +405,6 @@ object Profile {
     }
   }
 
-  /** HISTORY-RETENTION GC for an [[appendStatsState]] dir — the
-    * [[graft.ext.StateIO.truncateHistory]] core over the accounting
-    * pillar. Pure tag collapse: per-(source, batch) stat rows with
-    * `batch_id <= floor` re-tag to the base version — NOT folded into
-    * one row per source, deliberately: [[statsReportCore]] already sums
-    * counts and unions sketches across however many rows a version
-    * holds (both operations associative and commutative), so the
-    * collapsed rows report bit-identically, and folding would force a
-    * sketch merge rewrite for zero read-side benefit (the row count is
-    * sources × batches — metadata-sized either way; what truncation
-    * bounds is the PARTITION count). Deltas collapse their
-    * `delete_id <= floor` partitions and re-attribute
-    * `src_batch = greatest(src_batch, floor)` — every still-legal
-    * as-of bound is ≥ floor, so the `src_batch <= bound` correction
-    * cut selects exactly the rows it did before (the x141 gate). */
-  def truncateStatsHistory(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      floor: Long): Unit =
-    StateIO.truncateHistory(spark, dir, floor, Seq(
-      StateIO.TruncTable("stats", "batch_id"),
-      StateIO.TruncTable("stats_deltas", "delete_id", required = false)))
-
-  /** Complete a crashed multi-table swap in an [[appendStatsState]] dir
-    * — the public roll-forward for a [[truncateStatsHistory]] that
-    * crashed after its `_swap_commit` marker published (until the
-    * marker clears, every append/delete/compact/truncate entry fails
-    * fast naming this call). Returns true iff a crashed swap was found
-    * and rolled forward; false = nothing to do (safe to call blindly). */
-  def recoverStatsState(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
-
-  /** BRANCH an [[appendStatsState]] dir at a version
-    * ([[graft.ext.StateIO.cloneStateAsOf]] over the accounting
-    * pillar): the clone's plain [[statsReport]] folds exactly the rows
-    * the source's [[statsReportAsOf]] would at (asOfBatch, asOfDelete)
-    * — batch-attributed corrections outside the batch cut stay behind
-    * (unattributed rows travel wholly, the documented caveat). */
-  def cloneStatsState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String, asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      statsStateTables)
-
-  /** KEEP-LAST-N retention for an [[appendStatsState]] dir
-    * ([[graft.ext.StateIO.retentionFloor]] → [[truncateStatsHistory]]):
-    * collapse history so only the newest `keepLastBatches` versions stay
-    * individually addressable. Returns the floor applied, or None when
-    * the policy is already satisfied (idempotent — safe on a schedule). */
-  def retainStatsHistory(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches, Seq("stats"))
-    f.foreach(truncateStatsHistory(spark, dir, _))
-    f
-  }
-
-  /** The accounting pillar's table topology — shared by
-    * [[cloneStatsState]] and [[fastForwardStatsState]]. */
-  private[ext] val statsStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("stats", "batch_id"),
-    StateIO.TruncTable("stats_deltas", "delete_id", required = false))
-
-  /** Catch a [[cloneStatsState]] branch up to its source's current head
-    * ([[graft.ext.StateIO.fastForwardState]] over the accounting
-    * pillar). Returns the new (batch, delete) head. */
-  def fastForwardStatsState(
-      spark: org.apache.spark.sql.SparkSession, srcDir: String,
-      dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, statsStateTables)
-
   /** Small-file maintenance for an [[appendStatsState]] dir — rows (one
     * per source per batch, sketches included) are preserved exactly;
     * only the file layout compacts. Offline, backup-swap discipline

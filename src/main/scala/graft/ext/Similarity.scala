@@ -1808,9 +1808,9 @@ object Similarity {
     * (the documented crash-recovery path) dynamic-overwrites that
     * batch's `(batch_id, vb)` partitions assuming they hold EXACTLY
     * that batch's rows — any collapse would make the re-run drop or
-    * duplicate earlier batches' rows. History collapse is
-    * [[truncateIvfHistory]]-then-rebuild's job; this verb only rewrites
-    * file layout inside the partition shape the deltas rely on.
+    * duplicate earlier batches' rows. History collapse is the job of
+    * `StatePillar.Ivf.truncate` followed by a rebuild; this verb only
+    * rewrites file layout inside the partition shape the deltas rely on.
     *
     * Crash posture rides [[Dedup.compactStateTables]]' swap protocol:
     * each table rewrites to a `__compact_tmp` sibling and swaps in with
@@ -2098,68 +2098,6 @@ object Similarity {
     }
   }
 
-  /** HISTORY-RETENTION GC for an [[appendIvfState]] dir — the
-    * [[graft.ext.StateIO.truncateHistory]] core over the vector
-    * pillar's two tagged tables. Pure tag collapse: cell assignments
-    * with `batch_id <= floor` re-tag to the base version (every vector
-    * was assigned ONCE against the frozen batch-1 centroids, so any
-    * prefix replays in the same geometry — the re-tag moves partitions,
-    * never re-assigns), tombstones `delete_id <= floor` collapse and
-    * keep anti-joining at read time, so every still-legal as-of probe
-    * ([[ivfTopKFromStateAsOf]], bounds ≥ floor) returns bit-identical
-    * neighbors (the x140 gate). The frozen `centroids` and `_meta` are
-    * version-free and untouched; physical tombstone application remains
-    * [[compactIvfState]]'s job, and [[reclusterIvfState]] composes —
-    * it preserves whatever batch levels exist, collapsed or not. */
-  def truncateIvfHistory(
-      spark: SparkSession, dir: String, floor: Long): Unit =
-    StateIO.truncateHistory(spark, dir, floor, Seq(
-      StateIO.TruncTable("cells", "batch_id"),
-      StateIO.TruncTable("tombstones", "delete_id", required = false)),
-      extraRemnantChecks = Seq("centroids"))
-
-  /** BRANCH an [[appendIvfState]] dir at a version
-    * ([[graft.ext.StateIO.cloneStateAsOf]] over the vector pillar):
-    * the clone probes exactly like the source's as-of read at
-    * (asOfBatch, asOfDelete) and then evolves independently — the
-    * recluster trial run a production index cannot afford in place.
-    * Frozen `centroids` and `_meta` raw-copy byte-identical, so every
-    * cloned cell assignment stays valid under the cloned geometry. */
-  def cloneIvfState(
-      spark: SparkSession, srcDir: String, dstDir: String,
-      asOfBatch: Long, asOfDelete: Long = 0L): Unit =
-    StateIO.cloneStateAsOf(spark, srcDir, dstDir, asOfBatch, asOfDelete,
-      ivfStateTables, rawCopies = ivfStateRawCopies)
-
-  /** KEEP-LAST-N retention for an [[appendIvfState]] dir — see
-    * [[graft.ext.Profile.retainStatsHistory]]. */
-  def retainIvfHistory(
-      spark: SparkSession, dir: String,
-      keepLastBatches: Int): Option[Long] = {
-    val f = StateIO.retentionFloor(spark, dir, keepLastBatches, Seq("cells"))
-    f.foreach(truncateIvfHistory(spark, dir, _))
-    f
-  }
-
-  /** The vector pillar's table topology + frozen artifacts — shared by
-    * [[cloneIvfState]] and [[fastForwardIvfState]]. */
-  private[ext] val ivfStateTables: Seq[StateIO.TruncTable] = Seq(
-    StateIO.TruncTable("cells", "batch_id"),
-    StateIO.TruncTable("tombstones", "delete_id", required = false))
-  private[ext] val ivfStateRawCopies: Seq[String] = Seq("centroids", "_meta")
-
-  /** Catch a [[cloneIvfState]] branch up to its source's current head
-    * ([[graft.ext.StateIO.fastForwardState]] over the vector pillar).
-    * The frozen `centroids`/`_meta` must still be byte-identical to the
-    * branch's copies — a source that RECLUSTERED since the branch
-    * refuses by name (its post-branch cells are assigned under a
-    * geometry the branch does not hold; re-clone). Returns the new
-    * (batch, delete) head. */
-  def fastForwardIvfState(
-      spark: SparkSession, srcDir: String, dstDir: String): (Long, Long) =
-    StateIO.fastForwardState(spark, srcDir, dstDir, ivfStateTables,
-      rawCopies = ivfStateRawCopies)
-
   /** RECLUSTER an [[appendIvfState]] dir in place — the operator that
     * ACTS on [[ivfStateAudit]]'s `retrain_recommended` verdict (until
     * now the documented remedy was a manual full rebuild): retrain the
@@ -2195,7 +2133,7 @@ object Similarity {
     * the renames apply). A crash at ANY point leaves either the full
     * old fit (pre-marker — staged tmps are garbage) or a marker that
     * every read/append/compact entry fails fast on until
-    * [[recoverIvfState]] rolls the swap forward to the full new fit.
+    * [[StatePillar.recover]] rolls the swap forward to the full new fit.
     * There is no window where new centroids pair with old-geometry
     * cells: the first live rename happens only after the marker (and
     * with it the complete staged fit) is durable. */
@@ -2206,7 +2144,7 @@ object Similarity {
     * hook exposed — the x127 crash-recovery gate and the StateIO specs
     * inject a deterministic crash between the commit marker and the
     * table renames (`crashAfterApplied` = 0 or 1), then prove
-    * [[recoverIvfState]] restores the full new fit. Production callers
+    * [[StatePillar.recover]] restores the full new fit. Production callers
     * use the public overload (hook off). */
   private[graft] def reclusterIvfState(
       spark: SparkSession, dir: String, crashAfterApplied: Int): Unit =
@@ -2257,16 +2195,6 @@ object Similarity {
         if (hasBatch) Seq("batch_id") else Nil)),
       crashAfterApplied)
   }
-
-  /** Roll forward a [[reclusterIvfState]] that crashed after its commit
-    * point (the `_swap_commit` marker is present and every read/append
-    * fails fast): re-applies the staged centroids + cells renames —
-    * idempotent — and clears the marker, leaving the FULL new fit.
-    * Returns true iff a crashed swap was found; calling it on a healthy
-    * dir is a no-op. A crash BEFORE the commit point needs no recovery
-    * at all (the old fit is intact; staged tmp dirs are garbage). */
-  def recoverIvfState(spark: SparkSession, dir: String): Boolean =
-    StateIO.recoverSwap(spark, dir)
 
   /** IVF-state DRIFT audit — the measurement the frozen-centroid posture
     * ([[appendIvfState]] trains on the first batch and never retrains)

@@ -51,7 +51,7 @@ object StateAudit {
     * documents did the pillars agree on LAST week?" and
     * [[snapshotDiff]]'s version deltas are the same partition-pruned
     * cut the pillar reads use). As-of bounds below a truncated
-    * history's floor refuse ([[Index.truncatePostingsHistory]]). */
+    * history's floor refuse ([[StatePillar.truncate]]). */
   private def liveIds(
       spark: SparkSession, dir: String, table: String,
       asOf: Option[(Long, Long)]): DataFrame = {
@@ -185,7 +185,7 @@ object StateAudit {
     * advice) where `advice` is
     *   - 'truncate'  — tagged versions exceed `maxVersions`
     *     ([[graft.ext.StateIO.truncateHistory]] is the remedy; run the
-    *     pillar's `truncate*History`),
+    *     pillar's [[StatePillar.truncate]]),
     *   - 'compact'   — data files average more than
     *     `maxFilesPerLeafDir` per leaf partition dir (the per-append
     *     small-file accumulation; the pillar's `compact*State` is the

@@ -124,14 +124,14 @@ private[graft] object StateIO {
     val fs = marker.getFileSystem(hconf)
     require(!fs.exists(marker),
       s"found $marker — a multi-table swap (recluster) committed but did " +
-        "not finish applying; run StateIO.recoverSwap (or the pillar's " +
-        "recover entry point, e.g. Similarity.recoverIvfState) to roll it " +
+        "not finish applying; run StateIO.recoverSwap (the CLI's `state " +
+        "recover <pillar> <dir>`, StatePillar.recover) to roll it " +
         "forward before touching the state")
     val ff = new org.apache.hadoop.fs.Path(dir, FfPendingMarker)
     require(!fs.exists(ff),
       s"found $ff — a branch catch-up (fastForward) started but did not " +
-        "finish; re-run the pillar's fastForward entry point (e.g. " +
-        "Index.fastForwardPostingsState) to complete it before touching " +
+        "finish; re-run it (the CLI's `state fastforward <pillar> <src> " +
+        "<dst>`, StatePillar.fastForward) to complete it before touching " +
         "the state")
   }
 
@@ -703,7 +703,7 @@ private[graft] object StateIO {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** Marker file a history truncation ([[Index.truncatePostingsHistory]])
+  /** Marker file a history truncation ([[StatePillar.truncate]])
     * publishes BEFORE collapsing partitions: versions with tag ≤ floor no
     * longer exist individually, so as-of reads below it and tagged
     * writes at-or-below it must refuse. Written first so a crash between
@@ -812,9 +812,9 @@ private[graft] object StateIO {
       name: String, tagCol: String, extraPartitionCols: Seq[String] = Nil,
       required: Boolean = true)
 
-  /** The SHARED history-retention GC core every pillar's
-    * `truncate*History` wraps (the postings pillar pioneered the shape —
-    * [[Index.truncatePostingsHistory]] keeps its own body because it
+  /** The SHARED history-retention GC core behind
+    * [[StatePillar.truncate]] (the postings pillar pioneered the shape —
+    * [[Index.collapsePostingsHistory]] keeps its own body because it
     * additionally folds sub-floor tombstones into the sub-floor postings
     * physically; the other pillars collapse PURELY, which is exactly
     * as-of-preserving because the collapsed tombstones keep subtracting
@@ -898,7 +898,7 @@ private[graft] object StateIO {
   }
 
   /** BRANCH a state dir at a version — the shared core behind every
-    * pillar's `clone*StateAsOf`: materialize "the state after (append
+    * pillar's [[StatePillar.clone]]: materialize "the state after (append
     * B, delete D)" as an INDEPENDENT new state dir, so an experiment
     * (a recluster trial, a retention dry-run, a what-if curation pass)
     * mutates the branch while the source keeps serving. The tagged
@@ -1576,7 +1576,8 @@ private[graft] object StateIO {
   }
 
   /** CATCH a branch UP to its source's current head — the incremental
-    * twin of re-cloning, shared by every pillar's `fastForward*State`:
+    * twin of re-cloning, behind every pillar's
+    * [[StatePillar.fastForward]]:
     * a [[cloneStateAsOf]] branch taken at (B, D) advances to the
     * source's (B', D') by copying ONLY the missing tagged append
     * partitions (tag in (B, B']) plus a wholesale rewrite of the

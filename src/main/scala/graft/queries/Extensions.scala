@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
-import graft.ext.{AsOf, Behavior, Bpe, Compaction, Curate, Dedup, Index, JsonCols, Layout, Multimodal, Packing, Profile, RangeJoin, Sampling, Similarity, StateAudit, StateIO, TextAnalysis, Tfidf}
+import graft.ext.{AsOf, Behavior, Bpe, Compaction, Curate, Dedup, Index, JsonCols, Layout, Multimodal, Packing, Profile, RangeJoin, Sampling, Similarity, StateAudit, StateIO, StatePillar, TextAnalysis, Tfidf}
 
 /** Declared queries for the LLM-training-data extension operators (the
   * BASELINE.json north star): dedup (exact / MinHash / SimHash / n-gram
@@ -2106,7 +2106,7 @@ object Extensions {
   }
 
   /** x127 — CRASH-RECOVERY of the recluster swap
-    * ([[Similarity.recoverIvfState]]): [[Similarity.reclusterIvfState]]
+    * (`StatePillar.Ivf.recover`): [[Similarity.reclusterIvfState]]
     * moves centroids + cells under ONE commit point
     * ([[graft.ext.StateIO.swapInTables]] — stage both, publish the
     * `_swap_commit` marker with one atomic rename, then apply), so a
@@ -2139,7 +2139,7 @@ object Extensions {
         case e: IllegalArgumentException
             if e.getMessage.contains("recover") => true
       }
-    val recovered = Similarity.recoverIvfState(s, state)
+    val recovered = StatePillar.Ivf.recover(s, state)
     Similarity.ivfTopKFromState(s, state, probes, topK = 5, nProbe = 2)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rank"), round(col("cos"), 4).as("cos_sim"))
@@ -2429,7 +2429,7 @@ object Extensions {
   }
 
   /** x134 — HISTORY-RETENTION GC for the postings state
-    * ([[Index.truncatePostingsHistory]]): the operator that BOUNDS what
+    * (`StatePillar.Postings.truncate`): the operator that BOUNDS what
     * time-travel (x125) keeps. The tagged partitions are a full version
     * history — at production cadence, thousands of tiny `batch_id=N`
     * dirs per year and an unbounded promise that every version stays
@@ -2460,7 +2460,7 @@ object Extensions {
     Index.deleteFromPostingsState(s, state,
       docs.filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    Index.truncatePostingsHistory(s, state, floor = 2L)
+    StatePillar.Postings.truncate(s, state, floor = 2L)
     def refused(f: => Unit): Boolean =
       try { f; false }
       catch {
@@ -2619,7 +2619,7 @@ object Extensions {
     }
 
   /** x139 — HISTORY-RETENTION GC for the LSH state
-    * ([[Dedup.truncateLshHistory]]): x134's retention contract on the
+    * (`StatePillar.Lsh.truncate`): x134's retention contract on the
     * text-dedup pillar, via the shared
     * [[graft.ext.StateIO.truncateHistory]] core. Pure tag collapse —
     * every reps/bands/members row at or below the floor re-tags to the
@@ -2646,7 +2646,7 @@ object Extensions {
       docs.filter(col("doc_id") < 450 && pmod(col("doc_id"), lit(3)) === 1)
         .select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    Dedup.truncateLshHistory(s, state, floor = 2L)
+    StatePillar.Lsh.truncate(s, state, floor = 2L)
     val batch = docs.filter(col("doc_id") >= 450)
     val refusedAsOf = floorRefused(
       Dedup.incrementalLshPairsFromState(state, batch, "doc_id", "text",
@@ -2672,7 +2672,7 @@ object Extensions {
   }
 
   /** x140 — HISTORY-RETENTION GC for the IVF state
-    * ([[Similarity.truncateIvfHistory]]): the retention contract on the
+    * (`StatePillar.Ivf.truncate`): the retention contract on the
     * vector pillar. The geometry FROZE on batch 1, so the collapse is a
     * pure partition move — every cell row at or below the floor was
     * assigned against the same centroids it still probes under — and
@@ -2695,7 +2695,7 @@ object Extensions {
     Similarity.deleteFromIvfState(s, state,
       emb.filter(pmod(col("vec_id"), lit(5)) === 2).select(col("vec_id")),
       "vec_id", deleteTag = Some(1L))
-    Similarity.truncateIvfHistory(s, state, floor = 2L)
+    StatePillar.Ivf.truncate(s, state, floor = 2L)
     val probes = emb.filter(col("vec_id") < 10)
     val refusedAsOf = floorRefused(
       Similarity.ivfTopKFromStateAsOf(s, state, probes, topK = 5,
@@ -2722,7 +2722,7 @@ object Extensions {
   }
 
   /** x141 — HISTORY-RETENTION GC for the stats state
-    * ([[Profile.truncateStatsHistory]]): the retention contract on the
+    * (`StatePillar.Stats.truncate`): the retention contract on the
     * accounting pillar, exercised with a BATCH-ATTRIBUTED delete
     * (`srcBatchCol` — the mixed-cut-exactness path): the collapse
     * re-attributes sub-floor corrections to `greatest(src_batch,
@@ -2748,7 +2748,7 @@ object Extensions {
           when(col("doc_id") < 150, 1L)
             .when(col("doc_id") < 300, 2L).otherwise(3L)),
       state, "text", "source", Some(1L), Some("src_batch"))
-    Profile.truncateStatsHistory(s, state, floor = 2L)
+    StatePillar.Stats.truncate(s, state, floor = 2L)
     val refusedAsOf = floorRefused(
       Profile.statsReportAsOf(s, state, 1L, 2L).head(1))
     val refusedAppend = floorRefused(
@@ -2779,7 +2779,7 @@ object Extensions {
   }
 
   /** x142 — HISTORY-RETENTION GC for the tokenizer state
-    * ([[Bpe.truncateTokenizerHistory]]): the retention contract on the
+    * (`StatePillar.Tokenizer.truncate`): the retention contract on the
     * fifth pillar. The merges FROZE on batch 1 — every version's
     * persisted counts are the same unit — so the sidecar collapse is a
     * pure partition move and the two surviving budget selections
@@ -2801,7 +2801,7 @@ object Extensions {
     Bpe.deleteFromTokenizerState(s, state,
       docs.filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    Bpe.truncateTokenizerHistory(s, state, floor = 2L)
+    StatePillar.Tokenizer.truncate(s, state, floor = 2L)
     val quality = docs.select(col("doc_id"),
       length(col("text")).cast("double").as("q"))
     val refusedAsOf = floorRefused(
@@ -2884,7 +2884,7 @@ object Extensions {
   }
 
   /** x144 — STATE BRANCH (clone-at-version) on the postings pillar
-    * ([[Index.clonePostingsState]] over
+    * (`StatePillar.Postings.clone` over
     * [[graft.ext.StateIO.cloneStateAsOf]]): materialize "the index
     * after (append 2, delete 1)" as an INDEPENDENT directory — the
     * what-if curation branch: experiment on the clone while the source
@@ -2915,10 +2915,10 @@ object Extensions {
     Index.deleteFromPostingsState(s, src,
       docs.filter(pmod(col("doc_id"), lit(11)) === 5).select(col("doc_id")),
       "doc_id", deleteTag = Some(2L))
-    Index.clonePostingsState(s, src, dst, asOfBatch = 2L, asOfDelete = 1L)
+    StatePillar.Postings.clone(s, src, dst, asOfBatch = 2L, asOfDelete = 1L)
     val refusedOverwrite =
       try {
-        Index.clonePostingsState(s, src, dst, asOfBatch = 2L,
+        StatePillar.Postings.clone(s, src, dst, asOfBatch = 2L,
           asOfDelete = 1L)
         false
       } catch {
@@ -2992,7 +2992,7 @@ object Extensions {
       Profile.deleteFromStatsState(b1.limit(1), state, "text", "source",
         Some(1L)))
     val refusedTruncate = refused(
-      Profile.truncateStatsHistory(s, state, floor = 1L))
+      StatePillar.Stats.truncate(s, state, floor = 1L))
     // the crashed-writer artifact: an EXPIRED lease — taken over, the
     // append lands, and orderly completion releases the lock
     plantLease(System.currentTimeMillis() - 1000L)
@@ -3158,7 +3158,7 @@ object Extensions {
       .select(lit(phase).as("phase"), col("table"), col("files"),
         col("batch_versions"), col("delete_versions"), col("advice"))
     val before = Dedup.materialize(report("t1_grown"))
-    Index.truncatePostingsHistory(s, state, floor = 4L)
+    StatePillar.Postings.truncate(s, state, floor = 4L)
     Index.compactPostingsState(s, state)
     val after = Dedup.materialize(report("t2_collapsed"))
     val filesBefore = before.select(col("table"), col("files"))
@@ -3174,7 +3174,7 @@ object Extensions {
   }
 
   /** x149 — BRANCH FAST-FORWARD (catch-up)
-    * ([[Index.fastForwardPostingsState]] over
+    * (`StatePillar.Postings.fastForward` over
     * [[graft.ext.StateIO.fastForwardState]]): x144's clone branches a
     * version, but a branch that lives for months falls behind — and
     * the only remedy so far was a full re-clone, O(branch size). The
@@ -3206,8 +3206,8 @@ object Extensions {
       docs.filter(pmod(col("doc_id"), lit(7)) === 3 && col("doc_id") < 300)
         .select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    Index.clonePostingsState(s, src, s"$root/branch", 2L, 1L)
-    Index.clonePostingsState(s, src, s"$root/diverged", 2L, 1L)
+    StatePillar.Postings.clone(s, src, s"$root/branch", 2L, 1L)
+    StatePillar.Postings.clone(s, src, s"$root/diverged", 2L, 1L)
     // the source moves on: one more batch, one more delete
     Index.appendPostingsState(docs.filter(col("doc_id") >= 300), src,
       "doc_id", "text", batchTag = Some(3L))
@@ -3220,12 +3220,12 @@ object Extensions {
       s"$root/diverged", "doc_id", "text", batchTag = Some(3L))
     val refusedDiverged =
       try {
-        Index.fastForwardPostingsState(s, src, s"$root/diverged"); false
+        StatePillar.Postings.fastForward(s, src, s"$root/diverged"); false
       } catch {
         case e: IllegalArgumentException
             if e.getMessage.contains("DIVERGED") => true
       }
-    val head = Index.fastForwardPostingsState(s, src, s"$root/branch")
+    val head = StatePillar.Postings.fastForward(s, src, s"$root/branch")
     val caughtUpToHead = head == ((3L, 2L))
     val terms = Seq("dup", "vector", "window")
     def shape(df: DataFrame, label: String) =
@@ -3237,7 +3237,7 @@ object Extensions {
     val afterFf = Dedup.materialize(branchRead())
     // a second catch-up is a stable no-op: same head, read identical
     val noopStable =
-      Index.fastForwardPostingsState(s, src, s"$root/branch") == head &&
+      StatePillar.Postings.fastForward(s, src, s"$root/branch") == head &&
         branchRead().collect().toSeq == afterFf.collect().toSeq
     afterFf
       .unionByName(shape(
@@ -3302,7 +3302,7 @@ object Extensions {
 
   /** x152 — KEEP-LAST-N RETENTION POLICY
     * ([[graft.ext.StateIO.retentionFloor]] →
-    * [[Profile.retainStatsHistory]]): operators think "keep the last 2
+    * `StatePillar.Stats.retain`): operators think "keep the last 2
     * versions addressable", not in absolute floor numbers that drift as
     * batches land — the policy face of x140's truncation, and the verb
     * a cron-driven GC actually calls. Fixture: five tagged appends on
@@ -3324,10 +3324,10 @@ object Extensions {
         state, "text", "source", Some(i.toLong))
     }
     val appliedFloor =
-      Profile.retainStatsHistory(s, state, keepLastBatches = 2)
+      StatePillar.Stats.retain(s, state, keepLastBatches = 2)
         .contains(3L)
     val secondIsNoop =
-      Profile.retainStatsHistory(s, state, keepLastBatches = 2).isEmpty
+      StatePillar.Stats.retain(s, state, keepLastBatches = 2).isEmpty
     val refusedSubFloor =
       try { Profile.statsReportAsOf(s, state, 2L, 0L).collect(); false }
       catch {

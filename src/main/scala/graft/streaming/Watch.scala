@@ -16,8 +16,9 @@ import graft.etl.{Pipeline, Sinks}
   * reference simply loses.
   *
   * `maxFilesPerTrigger=1` preserves the reference's one-file-one-batch unit
-  * of work; per-batch sinks overwrite CSV/schema/metadata and append to the
-  * store, matching the reference's split sink modes.
+  * of work; per-batch sinks ([[Sinks.writeRun]], the same path `db` takes)
+  * overwrite CSV/schema/metadata and append to the store, matching the
+  * reference's split sink modes.
   */
 object Watch {
 
@@ -46,16 +47,10 @@ object Watch {
         if (fileNames.nonEmpty) {
           val start = java.time.Instant.now().toString
           val result = Pipeline.process(spark, files)
-          if (result.totalItems > 0) {
-            Sinks.writeCsvSingleFile(result.frame, s"$outputDir/cleaned_output.csv")
-            Sinks.writeSchemaJson(result.fieldStats, s"$outputDir/dynamic_schema.json")
-            Sinks.writeMetadataJson(
-              Pipeline.RunMetadata(start, java.time.Instant.now().toString,
-                fileNames.map(p => p.substring(p.lastIndexOf('/') + 1)).mkString(","),
-                result.totalItems, result.itemsByType),
-              s"$outputDir/processing_metadata.json")
-            if (useStore) Sinks.appendStore(result, fileNames.mkString(","), s"$outputDir/store")
-          }
+          if (result.totalItems > 0)
+            Sinks.writeRun(result, outputDir,
+              fileNames.map(p => p.substring(p.lastIndexOf('/') + 1)).mkString(","),
+              start, useStore)
           result.cleanup()
         }
         ()

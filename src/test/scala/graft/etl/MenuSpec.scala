@@ -121,6 +121,85 @@ class MenuSpec extends SparkSpec {
       state("retain", "lsh", ls, "--keep-last", "two"))
     intercept[IllegalArgumentException](
       state("truncate", "postings", ps, "--floor", "2.5"))
+    // a delete cut alone names no version: usage error, not a silent
+    // current-state audit
+    intercept[IllegalArgumentException](
+      state("audit", ls, ps, ts, "--asof-delete", "1"))
+  }
+
+  test("state subcommand: every verb on every registered pillar") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.{Bpe, Dedup, Index, Profile, Similarity, StatePillar}
+    val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select(col("doc_id"), col("text"), col("source"))
+    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val root = Files.createTempDirectory("graft_menu_pillars").toString
+    def batch(tag: Long) = docs.filter(col("doc_id") >= (tag - 1) * 20 &&
+      col("doc_id") < tag * 20)
+    val gone = docs.filter(col("doc_id") === 3)
+    val goneIds = gone.select(col("doc_id"))
+    // two tagged appends and one tagged delete per pillar — enough for
+    // every table the pillar can persist to exist on disk
+    val build: Map[String, String => Unit] = Map(
+      "lsh" -> { dir =>
+        Seq(1L, 2L).foreach(t => Dedup.appendLshState(batch(t), "doc_id",
+          "text", dir, batchTag = Some(t)))
+        Dedup.deleteFromLshState(spark, dir, goneIds, "doc_id", Some(1L))
+      },
+      "postings" -> { dir =>
+        Seq(1L, 2L).foreach(t => Index.appendPostingsState(batch(t), dir,
+          "doc_id", "text", batchTag = Some(t), positions = true))
+        Index.deleteFromPostingsState(spark, dir, goneIds, "doc_id", Some(1L))
+      },
+      "tokenizer" -> { dir =>
+        Seq(1L, 2L).foreach(t => Bpe.appendTokenizerState(batch(t), dir,
+          "doc_id", "text", numMerges = 3, batchTag = Some(t)))
+        Bpe.deleteFromTokenizerState(spark, dir, goneIds, "doc_id", Some(1L))
+      },
+      "stats" -> { dir =>
+        Seq(1L, 2L).foreach(t => Profile.appendStatsState(batch(t), dir,
+          "text", "source", Some(t)))
+        Profile.deleteFromStatsState(gone, dir, "text", "source", Some(1L))
+      },
+      "ivf" -> { dir =>
+        Seq(1L, 2L).foreach(t => Similarity.appendIvfState(
+          emb.filter(col("vec_id") >= (t - 1) * 20 && col("vec_id") < t * 20),
+          dir, k = 4, iters = 2, batchTag = Some(t)))
+        Similarity.deleteFromIvfState(spark, dir,
+          emb.filter(col("vec_id") === 3), "vec_id", Some(1L))
+      },
+      "fp" -> { dir =>
+        Seq(1L, 2L).foreach(t => Dedup.appendFpState(
+          batch(t).select(col("doc_id"), hash(col("text")).cast("long")
+            .as("sig")), dir, "doc_id", "sig", batchTag = Some(t)))
+        Dedup.deleteFromFpState(spark, dir, goneIds, "doc_id", Some(1L))
+      })
+    assert(build.keySet == StatePillar.names.toSet)
+    StatePillar.all.foreach { p =>
+      val dir = s"$root/${p.name}"
+      build(p.name)(dir)
+      // the descriptor's table list is exactly what the pillar persists:
+      // a table missing from it would be left out of every clone
+      val onDisk = new java.io.File(dir).list().toSeq
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+      assert(onDisk.sorted == p.healthTables.sorted, s"pillar ${p.name}")
+      def run(args: String*): String = state(args: _*)._1
+      assert(run("recover", p.name, dir).contains("nothing to recover"),
+        p.name)
+      val health = run("health", p.name, dir)
+      p.healthTables.foreach(t =>
+        assert(health.contains(s"table=$t "), s"${p.name}: $health"))
+      assert(run("clone", p.name, dir, s"$dir.b", "--asof-batch", "1")
+        .contains("branched"), p.name)
+      assert(run("fastforward", p.name, dir, s"$dir.b")
+        .contains("(append=2, delete=1)"), p.name)
+      assert(run("retain", p.name, dir, "--keep-last", "1")
+        .contains("collapsed history <= 1"), p.name)
+      assert(run("truncate", p.name, dir, "--floor", "2")
+        .contains("collapsed history <= 2"), p.name)
+      assert(run("retain", p.name, dir, "--keep-last", "1")
+        .contains("already satisfied"), p.name)
+    }
   }
 
   test("state subcommand: the fingerprint pillar drives through the same verbs") {

@@ -47,12 +47,15 @@ class WatchApiSpec extends SparkSpec {
     try q2.processAllAvailable() finally q2.stop()
 
     // the store appends ONE schemas row per processed batch (one file per
-    // batch under maxFilesPerTrigger=1) — the exactly-once ledger
+    // batch under maxFilesPerTrigger=1) — the exactly-once ledger, keyed
+    // by basename exactly as `db` and the metadata JSON name the file
     val processed = spark.read.parquet(s"$out/store/schemas")
-      .select("filename").collect()
-      .map(_.getString(0).split('/').last).toSeq
+      .select("filename").collect().map(_.getString(0)).toSeq
     assert(processed.sorted == Seq("a.txt", "b.txt", "c.txt"),
       s"per-file process counts must all be 1; got $processed")
+    val rowFiles = spark.read.parquet(s"$out/store/processed_data")
+      .select("filename").distinct().collect().map(_.getString(0)).toSeq
+    assert(rowFiles.sorted == Seq("a.txt", "b.txt", "c.txt"), rowFiles)
   }
 
   test("POST /process returns {success, data, types} (F2 products fixture)") {

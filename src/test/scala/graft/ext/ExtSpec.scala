@@ -3368,23 +3368,23 @@ class ExtSpec extends SparkSpec {
       Similarity.ivfTopKFromState(spark, dir, probes, topK = 3, nProbe = 2)
         .collect())
     assert(eRead.getMessage.contains("recoverSwap") ||
-      eRead.getMessage.contains("recoverIvfState"))
+      eRead.getMessage.contains("StatePillar.recover"))
     intercept[IllegalArgumentException](
       Similarity.appendIvfState(emb, dir, k = 4, iters = 1,
         batchTag = Some(3L)))
     intercept[IllegalArgumentException](
       Similarity.reclusterIvfState(spark, dir))
     // roll forward: the FULL new fit, bit-identical to an uncrashed run
-    assert(Similarity.recoverIvfState(spark, dir))
+    assert(StatePillar.Ivf.recover(spark, dir))
     assert(!fs.exists(marker))
     assert(answers == wantAfter)
-    assert(!Similarity.recoverIvfState(spark, dir)) // healthy dir: no-op
+    assert(!StatePillar.Ivf.recover(spark, dir)) // healthy dir: no-op
 
     // crash right AFTER the commit marker (nothing applied yet): the
     // staged fit is durable, recovery still lands the full new fit
     intercept[StateIO.InjectedCrash](
       Similarity.reclusterIvfState(spark, dir, crashAfterApplied = 0))
-    assert(Similarity.recoverIvfState(spark, dir))
+    assert(StatePillar.Ivf.recover(spark, dir))
     assert(answers == wantAfter)
 
     // crash after BOTH tables applied but before the marker clears —
@@ -3399,7 +3399,7 @@ class ExtSpec extends SparkSpec {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells__compact_tmp")
     assert(fs.rename(live, tmp)) // the staged new content
     fs.mkdirs(bak)               // the old content, moved aside pre-crash
-    assert(Similarity.recoverIvfState(spark, dir))
+    assert(StatePillar.Ivf.recover(spark, dir))
     assert(fs.exists(live) && !fs.exists(tmp) && !fs.exists(bak) &&
       !fs.exists(marker))
     assert(answers == wantAfter)
@@ -3719,7 +3719,7 @@ class ExtSpec extends SparkSpec {
       .agg(sum(col("n_docs"))).head().getLong(0) == survivors)
   }
 
-  test("truncatePostingsHistory: >=floor snapshots survive bit-identical, sub-floor refuses") {
+  test("postings truncate: >=floor snapshots survive, sub-floor refuses") {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("graft-gc")
@@ -3742,7 +3742,7 @@ class ExtSpec extends SparkSpec {
         .toSeq
     val preFloor = snap(2L, 2L)
     val preCurrent = snap(3L, 2L)
-    Index.truncatePostingsHistory(spark, dir, floor = 2L)
+    StatePillar.Postings.truncate(spark, dir, floor = 2L)
     assert(snap(2L, 2L) == preFloor, "the floor version must survive GC")
     assert(snap(3L, 2L) == preCurrent, "the current version must survive GC")
     assert(Index.bm25TopKFromState(spark, dir, terms, k = 10,
@@ -3771,9 +3771,9 @@ class ExtSpec extends SparkSpec {
     refuses(Index.appendPostingsState(docs.limit(1), dir, "doc_id", "text"))
     refuses(Index.deleteFromPostingsState(spark, dir,
       docs.limit(1).select(col("doc_id")), "doc_id", deleteTag = Some(2L)))
-    refuses(Index.truncatePostingsHistory(spark, dir, floor = 1L))
+    refuses(StatePillar.Postings.truncate(spark, dir, floor = 1L))
     intercept[IllegalArgumentException](
-      Index.truncatePostingsHistory(spark, dir, floor = 9L))
+      StatePillar.Postings.truncate(spark, dir, floor = 9L))
     // life goes on above the floor: append batch 4, delete tag 3, compact
     Index.appendPostingsState(docs.filter(col("doc_id") < 20), dir,
       "doc_id", "text", batchTag = Some(4L))
@@ -3947,7 +3947,7 @@ class ExtSpec extends SparkSpec {
       .map(_.getPath.getName).filter(_.startsWith(s"$tagCol=")).sorted
   }
 
-  test("truncateLshHistory: >=floor pair snapshots survive bit-identical, sub-floor refuses") {
+  test("lsh truncate: >=floor pair snapshots survive, sub-floor refuses") {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("graft-lsh-gc")
@@ -3974,7 +3974,7 @@ class ExtSpec extends SparkSpec {
     val preFloor = snap(2L, 2L)
     val preCurrent = snap(3L, 2L)
     assert(preCurrent.nonEmpty, "the fixture must produce near-dup pairs")
-    Dedup.truncateLshHistory(spark, dir, floor = 2L)
+    StatePillar.Lsh.truncate(spark, dir, floor = 2L)
     assert(snap(2L, 2L) == preFloor, "the floor version must survive GC")
     assert(snap(3L, 2L) == preCurrent, "the current version must survive GC")
     assert(partitionTags(dir, "reps", "batch_id") ==
@@ -3992,9 +3992,9 @@ class ExtSpec extends SparkSpec {
     refusesFloor(Dedup.appendLshState(docs.limit(1), "doc_id", "text", dir))
     refusesFloor(Dedup.deleteFromLshState(spark, dir,
       docs.limit(1).select(col("doc_id")), "doc_id", deleteTag = Some(2L)))
-    refusesFloor(Dedup.truncateLshHistory(spark, dir, floor = 1L))
+    refusesFloor(StatePillar.Lsh.truncate(spark, dir, floor = 1L))
     intercept[IllegalArgumentException](
-      Dedup.truncateLshHistory(spark, dir, floor = 9L))
+      StatePillar.Lsh.truncate(spark, dir, floor = 9L))
     // life goes on above the floor: append batch 4, delete tag 3, compact
     Dedup.appendLshState(docs.filter(col("doc_id") >= 450), "doc_id",
       "text", dir, batchTag = Some(4L))
@@ -4007,7 +4007,7 @@ class ExtSpec extends SparkSpec {
       excludeTag = Some(4L)).count() >= 0)
   }
 
-  test("truncateIvfHistory: >=floor probe snapshots survive bit-identical, sub-floor refuses") {
+  test("ivf truncate: >=floor probe snapshots survive, sub-floor refuses") {
     val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id"), col("embedding"))
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-gc")
@@ -4034,7 +4034,7 @@ class ExtSpec extends SparkSpec {
     val preFloor = snap(2L, 2L)
     val preCurrent = snap(3L, 2L)
     assert(preCurrent.nonEmpty)
-    Similarity.truncateIvfHistory(spark, dir, floor = 2L)
+    StatePillar.Ivf.truncate(spark, dir, floor = 2L)
     assert(snap(2L, 2L) == preFloor, "the floor version must survive GC")
     assert(snap(3L, 2L) == preCurrent, "the current version must survive GC")
     assert(partitionTags(dir, "cells", "batch_id") ==
@@ -4049,7 +4049,7 @@ class ExtSpec extends SparkSpec {
       iters = 2))
     refusesFloor(Similarity.deleteFromIvfState(spark, dir,
       emb.limit(1).select(col("vec_id")), "vec_id", deleteTag = Some(2L)))
-    refusesFloor(Similarity.truncateIvfHistory(spark, dir, floor = 1L))
+    refusesFloor(StatePillar.Ivf.truncate(spark, dir, floor = 1L))
     // life goes on: append batch 4, delete tag 3, compact, recluster
     Similarity.appendIvfState(emb.filter(col("vec_id") < 20), dir, k = 8,
       iters = 2, batchTag = Some(4L))
@@ -4061,7 +4061,7 @@ class ExtSpec extends SparkSpec {
       .count() > 0)
   }
 
-  test("truncateStatsHistory: >=floor report folds survive bit-identical, sub-floor refuses") {
+  test("stats truncate: >=floor report folds survive, sub-floor refuses") {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val dir = java.nio.file.Files.createTempDirectory("graft-stats-gc")
@@ -4088,7 +4088,7 @@ class ExtSpec extends SparkSpec {
     val preFloor = snap(2L, 2L)
     val preCurrent = snap(3L, 2L)
     assert(preCurrent.nonEmpty)
-    Profile.truncateStatsHistory(spark, dir, floor = 2L)
+    StatePillar.Stats.truncate(spark, dir, floor = 2L)
     assert(snap(2L, 2L) == preFloor, "the floor version must survive GC")
     assert(snap(3L, 2L) == preCurrent, "the current version must survive GC")
     assert(partitionTags(dir, "stats", "batch_id") ==
@@ -4103,7 +4103,7 @@ class ExtSpec extends SparkSpec {
       "source"))
     refusesFloor(Profile.deleteFromStatsState(docs.limit(1), dir, "text",
       "source", Some(2L)))
-    refusesFloor(Profile.truncateStatsHistory(spark, dir, floor = 1L))
+    refusesFloor(StatePillar.Stats.truncate(spark, dir, floor = 1L))
     // life goes on: append batch 4, delete tag 3, compact
     Profile.appendStatsState(docs.filter(col("doc_id") < 20), dir, "text",
       "source", Some(4L))
@@ -4113,7 +4113,7 @@ class ExtSpec extends SparkSpec {
     assert(Profile.statsReport(spark, dir).count() > 0)
   }
 
-  test("truncateTokenizerHistory: >=floor budget snapshots survive bit-identical, sub-floor refuses") {
+  test("tokenizer truncate: >=floor budgets survive, sub-floor refuses") {
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("graft-tok-gc")
@@ -4139,7 +4139,7 @@ class ExtSpec extends SparkSpec {
     val preFloor = snap(2L, 2L)
     val preCurrent = snap(3L, 2L)
     assert(preCurrent.nonEmpty)
-    Bpe.truncateTokenizerHistory(spark, dir, floor = 2L)
+    StatePillar.Tokenizer.truncate(spark, dir, floor = 2L)
     assert(snap(2L, 2L) == preFloor, "the floor version must survive GC")
     assert(snap(3L, 2L) == preCurrent, "the current version must survive GC")
     assert(partitionTags(dir, "doc_tokens", "batch_id") ==
@@ -4154,7 +4154,7 @@ class ExtSpec extends SparkSpec {
       "text", numMerges = 3))
     refusesFloor(Bpe.deleteFromTokenizerState(spark, dir,
       docs.limit(1).select(col("doc_id")), "doc_id", deleteTag = Some(2L)))
-    refusesFloor(Bpe.truncateTokenizerHistory(spark, dir, floor = 1L))
+    refusesFloor(StatePillar.Tokenizer.truncate(spark, dir, floor = 1L))
     // life goes on: append batch 4, delete tag 3, compact
     Bpe.appendTokenizerState(docs.filter(col("doc_id") < 20), dir,
       "doc_id", "text", numMerges = 3, batchTag = Some(4L))
@@ -4254,10 +4254,10 @@ class ExtSpec extends SparkSpec {
       emb.filter(pmod(col("vec_id"), lit(7)) === 3).select(col("vec_id")),
       "vec_id", deleteTag = Some(1L))
     // branch every pillar at (batch 2, delete 1)
-    Dedup.cloneLshState(spark, ls, s"$ls.b", 2L, 1L)
-    Bpe.cloneTokenizerState(spark, ts, s"$ts.b", 2L, 1L)
-    Profile.cloneStatsState(spark, ss, s"$ss.b", 2L, 1L)
-    Similarity.cloneIvfState(spark, vs, s"$vs.b", 2L, 1L)
+    StatePillar.Lsh.clone(spark, ls, s"$ls.b", 2L, 1L)
+    StatePillar.Tokenizer.clone(spark, ts, s"$ts.b", 2L, 1L)
+    StatePillar.Stats.clone(spark, ss, s"$ss.b", 2L, 1L)
+    StatePillar.Ivf.clone(spark, vs, s"$vs.b", 2L, 1L)
     // plain clone reads == source as-of reads, pillar by pillar
     val probe = docs.filter(col("doc_id") >= 400)
     def lshPairs(d: String, asOf: Option[(Long, Long)]) =
@@ -4292,11 +4292,11 @@ class ExtSpec extends SparkSpec {
         asOfBatch = 2L, asOfDelete = 1L)))
     // a clone never overwrites
     val e = intercept[IllegalArgumentException](
-      Dedup.cloneLshState(spark, ls, s"$ls.b", 2L, 1L))
+      StatePillar.Lsh.clone(spark, ls, s"$ls.b", 2L, 1L))
     assert(e.getMessage.contains("never overwrites"))
     // an empty version cannot be branched (batch tags start at 1)
     intercept[IllegalArgumentException](
-      Dedup.cloneLshState(spark, ls, s"$ls.zero", 0L, 0L))
+      StatePillar.Lsh.clone(spark, ls, s"$ls.zero", 0L, 0L))
     // the clone evolves independently: mutate it, source reads unchanged
     val srcBefore = lshPairs(ls, None)
     Dedup.appendLshState(b3d, "doc_id", "text", s"$ls.b",
@@ -4308,8 +4308,8 @@ class ExtSpec extends SparkSpec {
       "mutating the branch must not touch the source")
     // a truncated source's history floor carries to the clone (the
     // as-of bounds sit AT the floor — the collapsed base version)
-    Bpe.truncateTokenizerHistory(spark, ts, floor = 2L)
-    Bpe.cloneTokenizerState(spark, ts, s"$ts.b2", 2L, 2L)
+    StatePillar.Tokenizer.truncate(spark, ts, floor = 2L)
+    StatePillar.Tokenizer.clone(spark, ts, s"$ts.b2", 2L, 2L)
     assert(StateIO.readHistoryFloor(spark, s"$ts.b2") == 2L)
     intercept[IllegalArgumentException](
       Bpe.appendTokenizerState(b1d, s"$ts.b2", "doc_id", "text",
@@ -4341,9 +4341,9 @@ class ExtSpec extends SparkSpec {
       Profile.appendStatsState(docs.limit(1), dir, "text", "source",
         Some(3L)))
     assert(e.getMessage.contains("_swap_commit"))
-    assert(Profile.recoverStatsState(spark, dir),
+    assert(StatePillar.Stats.recover(spark, dir),
       "a crashed swap must be found and rolled forward")
-    assert(!Profile.recoverStatsState(spark, dir),
+    assert(!StatePillar.Stats.recover(spark, dir),
       "a second recovery is a no-op")
     // the full NEW fit landed: one collapsed partition, same content
     assert(partitionTags(dir, "stats", "batch_id") == Seq("batch_id=2"))
@@ -4355,10 +4355,10 @@ class ExtSpec extends SparkSpec {
     // the other pillars' recovery entries are callable and no-op clean
     val clean = java.nio.file.Files.createTempDirectory("graft-recover2")
       .toFile.getAbsolutePath
-    assert(!Dedup.recoverLshState(spark, s"$clean/lsh"))
-    assert(!Index.recoverPostingsState(spark, s"$clean/postings"))
-    assert(!Bpe.recoverTokenizerState(spark, s"$clean/tok"))
-    assert(!Similarity.recoverIvfState(spark, s"$clean/ivf"))
+    assert(!StatePillar.Lsh.recover(spark, s"$clean/lsh"))
+    assert(!StatePillar.Postings.recover(spark, s"$clean/postings"))
+    assert(!StatePillar.Tokenizer.recover(spark, s"$clean/tok"))
+    assert(!StatePillar.Ivf.recover(spark, s"$clean/ivf"))
   }
 
   test("manifest commits: the object-store protocol never exposes a mixed fit") {
@@ -4477,13 +4477,13 @@ class ExtSpec extends SparkSpec {
       Profile.deleteFromStatsState(docs.limit(1), dir, "text", "source",
         Some(1L)))
     intercept[StateIO.ConcurrentWriter](
-      Profile.truncateStatsHistory(spark, dir, floor = 1L))
+      StatePillar.Stats.truncate(spark, dir, floor = 1L))
     intercept[StateIO.ConcurrentWriter](
       Profile.compactStatsState(spark, dir))
     intercept[StateIO.ConcurrentWriter](
-      Profile.recoverStatsState(spark, dir))
+      StatePillar.Stats.recover(spark, dir))
     intercept[StateIO.ConcurrentWriter](
-      Profile.cloneStatsState(spark, dir, s"$dir.branch", 1L, 0L))
+      StatePillar.Stats.clone(spark, dir, s"$dir.branch", 1L, 0L))
     fs.delete(lock, false)
     // an exception inside the locked body is an ORDERLY failure: the
     // lease releases (the marker protocols own recovery), so a retry
@@ -4495,7 +4495,7 @@ class ExtSpec extends SparkSpec {
         Seq(("stats", collapsed, Seq("batch_id"))), crashAfterApplied = 0))
     assert(!fs.exists(lock),
       "a thrown body must release the lease (real crashes rely on expiry)")
-    assert(Profile.recoverStatsState(spark, dir))
+    assert(StatePillar.Stats.recover(spark, dir))
   }
 
   test("lease seam: a store with NON-ATOMIC create (both racing creates " +
@@ -4999,7 +4999,7 @@ class ExtSpec extends SparkSpec {
     Similarity.appendIvfState(emb.filter(col("vec_id") >= 120), dir,
       k = 4, iters = 2, batchTag = Some(2L))
     // the branch holds version (1, 1); the source has moved to (2, 1)
-    Similarity.cloneIvfState(spark, dir, s"$root/branch", 1L, 1L)
+    StatePillar.Ivf.clone(spark, dir, s"$root/branch", 1L, 1L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).toSeq.sorted
     assert(
@@ -5161,7 +5161,7 @@ class ExtSpec extends SparkSpec {
       docs.filter(pmod(col("doc_id"), lit(7)) === 3 && col("doc_id") < 300)
         .select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    Index.clonePostingsState(spark, src, s"$root/branch", 2L, 1L)
+    StatePillar.Postings.clone(spark, src, s"$root/branch", 2L, 1L)
     // the source moves on: one more batch, one more delete
     Index.appendPostingsState(docs.filter(col("doc_id") >= 300), src,
       "doc_id", "text", batchTag = Some(3L))
@@ -5175,21 +5175,21 @@ class ExtSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
         .toSeq
     assert(read(s"$root/branch") != read(src), "fixture must diverge first")
-    val head = Index.fastForwardPostingsState(spark, src, s"$root/branch")
+    val head = StatePillar.Postings.fastForward(spark, src, s"$root/branch")
     assert(head == (3L, 2L))
     assert(read(s"$root/branch") == read(src),
       "caught-up branch must answer exactly like the source head")
-    Index.clonePostingsState(spark, src, s"$root/fresh", 3L, 2L)
+    StatePillar.Postings.clone(spark, src, s"$root/fresh", 3L, 2L)
     assert(read(s"$root/branch") == read(s"$root/fresh"),
       "catch-up must equal a fresh clone at the head")
     // no-op: already at head — same cut back, read unchanged
-    assert(Index.fastForwardPostingsState(spark, src, s"$root/branch") ==
+    assert(StatePillar.Postings.fastForward(spark, src, s"$root/branch") ==
       (3L, 2L))
     assert(read(s"$root/branch") == read(src))
     // lineage advanced: a later source append fast-forwards again
     Index.appendPostingsState(docs.filter(col("doc_id") < 10), src,
       "doc_id", "text", batchTag = Some(4L))
-    assert(Index.fastForwardPostingsState(spark, src, s"$root/branch") ==
+    assert(StatePillar.Postings.fastForward(spark, src, s"$root/branch") ==
       (4L, 2L))
     assert(read(s"$root/branch") == read(src))
   }
@@ -5208,28 +5208,28 @@ class ExtSpec extends SparkSpec {
     }
     // not a branch: the source itself carries no _branch lineage
     val e1 = intercept[IllegalArgumentException](
-      Index.fastForwardPostingsState(spark, src, src))
+      StatePillar.Postings.fastForward(spark, src, src))
     assert(e1.getMessage.contains("not a clone"), e1.getMessage)
     // wrong source: a branch only pulls from its own lineage
     val src2 = s"$root/other"
     Index.appendPostingsState(docs.filter(col("doc_id") < 50), src2,
       "doc_id", "text", batchTag = Some(1L))
-    Index.clonePostingsState(spark, src, s"$root/b1", 2L)
+    StatePillar.Postings.clone(spark, src, s"$root/b1", 2L)
     val e2 = intercept[IllegalArgumentException](
-      Index.fastForwardPostingsState(spark, src2, s"$root/b1"))
+      StatePillar.Postings.fastForward(spark, src2, s"$root/b1"))
     assert(e2.getMessage.contains("branch's own source"), e2.getMessage)
     // diverged: local append past the cut
-    Index.clonePostingsState(spark, src, s"$root/b2", 2L)
+    StatePillar.Postings.clone(spark, src, s"$root/b2", 2L)
     Index.appendPostingsState(docs.filter(col("doc_id") >= 900), s"$root/b2",
       "doc_id", "text", batchTag = Some(3L))
     val e3 = intercept[IllegalArgumentException](
-      Index.fastForwardPostingsState(spark, src, s"$root/b2"))
+      StatePillar.Postings.fastForward(spark, src, s"$root/b2"))
     assert(e3.getMessage.contains("DIVERGED"), e3.getMessage)
     // truncated source: the versions the catch-up needs were collapsed
-    Index.clonePostingsState(spark, src, s"$root/b3", 1L)
-    Index.truncatePostingsHistory(spark, src, floor = 2L)
+    StatePillar.Postings.clone(spark, src, s"$root/b3", 1L)
+    StatePillar.Postings.truncate(spark, src, floor = 2L)
     val e4 = intercept[IllegalArgumentException](
-      Index.fastForwardPostingsState(spark, src, s"$root/b3"))
+      StatePillar.Postings.fastForward(spark, src, s"$root/b3"))
     assert(e4.getMessage.contains("truncated history"), e4.getMessage)
   }
 
@@ -5248,16 +5248,16 @@ class ExtSpec extends SparkSpec {
     // UNTAGGED local rows on a branch are invisible to the tag-max
     // divergence probe (nothing to max over) — refused by name at the FS
     // level, and BEFORE the marker, so branch reads stay open
-    Index.clonePostingsState(spark, src, s"$root/b1", 1L)
+    StatePillar.Postings.clone(spark, src, s"$root/b1", 1L)
     Index.appendPostingsState(docs.filter(col("doc_id") >= 900), s"$root/b1",
       "doc_id", "text") // untagged local write
     val e1 = intercept[IllegalArgumentException](
-      Index.fastForwardPostingsState(spark, src, s"$root/b1"))
+      StatePillar.Postings.fastForward(spark, src, s"$root/b1"))
     assert(e1.getMessage.contains("UNTAGGED"), e1.getMessage)
     assert(!new java.io.File(s"$root/b1/_ff_pending").exists())
     // corrupt / partially-written _branch lineage: the named refusal with
     // the re-clone remedy, not a bare NoSuchElementException
-    Index.clonePostingsState(spark, src, s"$root/b2", 1L)
+    StatePillar.Postings.clone(spark, src, s"$root/b2", 1L)
     // drop the Hadoop local-FS checksum sidecar so the corruption below
     // surfaces as CONTENT corruption, not a crc mismatch
     java.nio.file.Files.deleteIfExists(
@@ -5265,7 +5265,7 @@ class ExtSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/b2/_branch"), "garbage\n")
     val e2 = intercept[IllegalStateException](
-      Index.fastForwardPostingsState(spark, src, s"$root/b2"))
+      StatePillar.Postings.fastForward(spark, src, s"$root/b2"))
     assert(e2.getMessage.contains("corrupt _branch lineage"), e2.getMessage)
     // an UNTAGGED source table refuses BEFORE the marker publishes: were
     // it after, every re-run would refuse identically and the marker
@@ -5287,7 +5287,7 @@ class ExtSpec extends SparkSpec {
       docs.filter(col("doc_id") === 8).select(col("doc_id")), "doc_id",
       deleteTag = Some(2L))
     val e3 = intercept[IllegalArgumentException](
-      Bpe.fastForwardTokenizerState(spark, src2, dst))
+      StatePillar.Tokenizer.fastForward(spark, src2, dst))
     assert(e3.getMessage.contains("TAGGED source"), e3.getMessage)
     assert(!new java.io.File(s"$dst/_ff_pending").exists())
   }
@@ -5303,14 +5303,14 @@ class ExtSpec extends SparkSpec {
     Similarity.appendIvfState(
       emb.filter(col("vec_id") >= 60 && col("vec_id") < 120), src,
       k = 4, iters = 2, batchTag = Some(2L))
-    Similarity.cloneIvfState(spark, src, s"$root/branch", 1L)
+    StatePillar.Ivf.clone(spark, src, s"$root/branch", 1L)
     Similarity.appendIvfState(emb.filter(col("vec_id") >= 120), src,
       k = 4, iters = 2, batchTag = Some(3L))
     // a recluster rewrites the frozen centroids — the branch's cells
     // are assigned under the OLD geometry; catch-up must refuse
     Similarity.reclusterIvfState(spark, src)
     val e = intercept[IllegalArgumentException](
-      Similarity.fastForwardIvfState(spark, src, s"$root/branch"))
+      StatePillar.Ivf.fastForward(spark, src, s"$root/branch"))
     assert(e.getMessage.contains("frozen artifact"), e.getMessage)
     // the tokenizer twin: parity when merges are untouched
     val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
@@ -5318,14 +5318,14 @@ class ExtSpec extends SparkSpec {
     val ts = s"$root/tok"
     Bpe.appendTokenizerState(docs.filter(col("doc_id") < 150), ts,
       "doc_id", "text", numMerges = 3, batchTag = Some(1L))
-    Bpe.cloneTokenizerState(spark, ts, s"$ts.b", 1L)
+    StatePillar.Tokenizer.clone(spark, ts, s"$ts.b", 1L)
     Bpe.appendTokenizerState(
       docs.filter(col("doc_id") >= 150 && col("doc_id") < 300), ts,
       "doc_id", "text", numMerges = 3, batchTag = Some(2L))
     Bpe.deleteFromTokenizerState(spark, ts,
       docs.filter(pmod(col("doc_id"), lit(7)) === 3).select(col("doc_id")),
       "doc_id", deleteTag = Some(1L))
-    assert(Bpe.fastForwardTokenizerState(spark, ts, s"$ts.b") == (2L, 1L))
+    assert(StatePillar.Tokenizer.fastForward(spark, ts, s"$ts.b") == (2L, 1L))
     val quality = docs.select(col("doc_id"),
       length(col("text")).cast("double").as("q"))
     def budget(d: String) =
@@ -5344,7 +5344,7 @@ class ExtSpec extends SparkSpec {
     val src = s"$root/postings"
     Index.appendPostingsState(docs.filter(col("doc_id") < 200), src,
       "doc_id", "text", batchTag = Some(1L))
-    Index.clonePostingsState(spark, src, s"$root/branch", 1L)
+    StatePillar.Postings.clone(spark, src, s"$root/branch", 1L)
     Index.appendPostingsState(docs.filter(col("doc_id") >= 200), src,
       "doc_id", "text", batchTag = Some(2L))
     Index.deleteFromPostingsState(spark, src,
@@ -5368,7 +5368,7 @@ class ExtSpec extends SparkSpec {
       Index.appendPostingsState(docs.filter(col("doc_id") < 10),
         s"$root/branch", "doc_id", "text", batchTag = Some(9L)))
     // the re-run completes idempotently and clears the marker
-    assert(Index.fastForwardPostingsState(spark, src, s"$root/branch") ==
+    assert(StatePillar.Postings.fastForward(spark, src, s"$root/branch") ==
       (2L, 1L))
     assert(!fs.exists(marker))
     def read(d: String) =

@@ -161,7 +161,7 @@ class FpStateSpec extends SparkSpec {
       ((0L until 60L).toSet -- Set(5L, 25L)))
     // truncate to floor 2: plain + still-legal as-of reads identical,
     // sub-floor as-of refuses by name
-    Dedup.truncateFpHistory(spark, dir, 2L)
+    StatePillar.Fp.truncate(spark, dir, 2L)
     assert(pairs(dir) == before)
     assert(pairs(dir, asOf = Some((2L, 2L))) == at22)
     val err = intercept[IllegalArgumentException] {
@@ -169,12 +169,12 @@ class FpStateSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("floor"))
     // retention already satisfied at keep-last 2 (batches 2,3 remain)
-    assert(Dedup.retainFpHistory(spark, dir, 2).isEmpty)
+    assert(StatePillar.Fp.retain(spark, dir, 2).isEmpty)
     // clone at (2,2): the branch's PLAIN read answers like the source's
     // as-of; fast-forward then catches it up to the full head
-    Dedup.cloneFpState(spark, dir, dst, asOfBatch = 2L, asOfDelete = 2L)
+    StatePillar.Fp.clone(spark, dir, dst, asOfBatch = 2L, asOfDelete = 2L)
     assert(pairs(dst) == at22)
-    assert(Dedup.fastForwardFpState(spark, dir, dst) == ((3L, 2L)))
+    assert(StatePillar.Fp.fastForward(spark, dir, dst) == ((3L, 2L)))
     assert(pairs(dst) == before)
     // compaction applies tombstones physically, keeps the relation and
     // the bucket-pruned probe read
@@ -189,7 +189,7 @@ class FpStateSpec extends SparkSpec {
       .mkString.contains("bkt"),
       s"compaction flattened the bkt layout:\n$plan")
     // healthy dir: nothing to recover
-    assert(!Dedup.recoverFpState(spark, dir))
+    assert(!StatePillar.Fp.recover(spark, dir))
   }
 
   test("streaming media ingest: near-dups rejected against the corpus, " +
