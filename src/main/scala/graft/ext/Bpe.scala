@@ -383,8 +383,6 @@ object Bpe {
   // `__compact_bak` fail-fast, tombstone deletes, offline compaction.
   // ---------------------------------------------------------------------
 
-  private val tokenizerTables = Seq("merges", "doc_tokens", "tombstones")
-
   /** Append a batch to a tokenizer state dir. First contact TRAINS
     * [[trainMerges]] on that batch and freezes the merge list to
     * `dir/merges` (training on a representative first batch and freezing
@@ -413,7 +411,7 @@ object Bpe {
       numMerges: Int = 4, batchTag: Option[Long] = None): Unit =
       StateIO.withWriterLock(batch.sparkSession, dir) {
     val spark = batch.sparkSession
-    StateIO.checkNoCompactRemnants(spark, dir, tokenizerTables)
+    StatePillar.Tokenizer.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, batchTag, "append")
     val merges = readTokenizerMeta(spark, dir) match {
       case Some(stored) =>
@@ -479,17 +477,8 @@ object Bpe {
     val untagged = excludeTag
       .filter(_ => cut.columns.contains("batch_id"))
       .map(tag => cut.filter(col("batch_id") =!= tag)).getOrElse(cut)
-    val live = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-      case Some(tbRaw) =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", dt, dir, "tombstones")
-          case None => tbRaw
-        }
-        untagged.join(tb.select(col("id")), Seq("id"), "left_anti")
-      case None => untagged
-    }
-    live.select(col("id"), col("bpe_tokens"))
+    StatePillar.Tokenizer.live(spark, dir, untagged, asOf.map(_._2))
+      .select(col("id"), col("bpe_tokens"))
   }
 
   /** DELETE documents from a tokenizer state — O(|ids|) tombstone
@@ -504,22 +493,7 @@ object Bpe {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       ids: DataFrame, idCol: String,
       deleteTag: Option[Long] = None): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir, tokenizerTables)
-    StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
-    val del = ids.select(col(idCol).as("id")).distinct()
-    deleteTag match {
-      case Some(t) =>
-        del.write.mode("overwrite").parquet(s"${StateIO.tablePath(spark, dir, "tombstones")}/delete_id=$t")
-      case None =>
-        val fresh = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-          case Some(tb) => Dedup.materialize(
-            del.join(tb.select(col("id")), Seq("id"), "left_anti"))
-          case None => del
-        }
-        fresh.write.mode("append").parquet(StateIO.tablePath(spark, dir, "tombstones"))
-    }
-  }
+    StatePillar.Tokenizer.delete(spark, dir, ids, col(idCol), deleteTag)
 
   /** [[graft.ext.Sampling.tokenBudget]] answered from persisted encoded
     * counts: the budget prefix sum runs over the narrow (id, bpe_tokens)
@@ -706,19 +680,10 @@ object Bpe {
     * the tombstones table itself is kept (id-reuse contract). Offline. */
   def compactTokenizerState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytes: Long = 128L << 20): Unit = {
-    // materialized so no table rewritten later in the sequence re-reads
-    // the tombstones files after their own swap replaced them
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map(tb => Dedup.materialize(tb.select(col("id"))))
-    val dropDeleted: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) => df.join(tb, Seq("id"), "left_anti")
-      case None => df
-    }
-    Dedup.compactStateTables(spark, dir,
-      Seq("merges" -> false, "doc_tokens" -> false, "tombstones" -> true),
-      targetBytes, transforms = Map("doc_tokens" -> dropDeleted))
-  }
+      targetBytes: Long = 128L << 20): Unit =
+    StatePillar.Tokenizer.compact(spark, dir,
+      Seq("merges" -> false, "doc_tokens" -> false), targetBytes,
+      dropFrom = Seq("doc_tokens"))
 
   /** numMerges stored in `dir/_meta`, or None if the state is untrained.
     * Only PATH_NOT_FOUND means untrained — the [[StateIO]] discipline

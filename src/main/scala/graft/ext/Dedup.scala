@@ -522,22 +522,17 @@ object Dedup {
       numPerms: Int, rowsPerBand: Int, shingleSize: Int,
       batchTag: Option[Long]): Unit = {
     val spark = docs.sparkSession
+    // before the first-contact _meta write: a marked dir stays untouched
+    StatePillar.Lsh.checkWritable(spark, dir)
     checkLshMeta(spark, dir, numPerms, rowsPerBand, shingleSize,
       writeIfAbsent = true)
-    // consistency guard: bands/members without reps (or a __compact_bak
-    // leftover) is a compaction-crash remnant, NOT a fresh dir — treating
-    // it as empty would rebuild reps from this batch alone and every
-    // later pair read would silently miss the old corpus. Fail with the
-    // recovery step instead.
+    // consistency guard: bands/members without reps is a compaction-crash
+    // remnant, NOT a fresh dir — treating it as empty would rebuild reps
+    // from this batch alone and every later pair read would silently
+    // miss the old corpus. Fail with the recovery step instead.
     locally {
-      val hconf = spark.sessionState.newHadoopConf()
       def p(name: String) = new org.apache.hadoop.fs.Path(dir, name)
-      val fs = p("reps").getFileSystem(hconf)
-      Seq("bands", "reps", "members", "tombstones").foreach { t =>
-        require(!fs.exists(p(s"${t}__compact_bak")),
-          s"found $dir/${t}__compact_bak — a compaction crashed mid-swap; " +
-            "restore it before appending")
-      }
+      val fs = p("reps").getFileSystem(spark.sessionState.newHadoopConf())
       require(fs.exists(p("reps")) ||
           (!fs.exists(p("members")) && !fs.exists(p("bands"))),
         s"LSH state at $dir has bands/members but no reps table — " +
@@ -717,37 +712,21 @@ object Dedup {
   def compactLshState(
       spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Unit =
-      StateIO.withWriterLock(spark, dir) {
     // apply tombstones ([[deleteFromLshState]]) physically during the
     // rewrite: deleted member rows drop, and reps/bands of groups with NO
-    // surviving member drop with them. The tombstones table is KEPT
-    // (compacted): re-applying a tombstone to already-gone rows is a
-    // no-op, so reads stay correct through a crash at any point, and the
-    // never-reuse-a-deleted-id contract keeps needing it. The
-    // surviving-rid set is materialized from the LIVE tables BEFORE any
-    // swap so every table's rewrite sees the same consistent snapshot.
-    // materialized so no table rewritten later in the sequence re-reads
-    // the tombstones files after their own swap replaced them
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map(tb => materialize(tb.select(col("id"))))
-    val survivingRids = tombs.map { tb =>
-      materialize(spark.read.parquet(StateIO.tablePath(spark, dir, "members"))
-        .join(tb, Seq("id"), "left_anti").select(col("rid")).distinct())
-    }
-    val dropMembers: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) => df.join(tb, Seq("id"), "left_anti")
-      case None => df
-    }
-    val dropDeadRids: DataFrame => DataFrame = df => survivingRids match {
-      case Some(sr) => df.join(sr, Seq("rid"), "left_semi")
-      case None => df
-    }
-    compactStateTables(spark, dir,
-      Seq("bands" -> true, "reps" -> false, "members" -> true,
-        "tombstones" -> true), targetBytes,
-      transforms = Map("members" -> dropMembers, "reps" -> dropDeadRids,
-        "bands" -> dropDeadRids))
-  }
+    // surviving member drop with them. The surviving-rid set is
+    // materialized from the LIVE tables BEFORE any swap so every table's
+    // rewrite sees the same consistent snapshot.
+    StatePillar.Lsh.compact(spark, dir,
+      Seq("bands" -> true, "reps" -> false, "members" -> true), targetBytes,
+      dropFrom = Seq("members"), more = _.map { tb =>
+        val survivingRids = materialize(StatePillar.Lsh.minus(Some(tb))(
+          spark.read.parquet(StateIO.tablePath(spark, dir, "members")))
+          .select(col("rid")).distinct())
+        val dropDeadRids: DataFrame => DataFrame =
+          _.join(survivingRids, Seq("rid"), "left_semi")
+        Map("reps" -> dropDeadRids, "bands" -> dropDeadRids)
+      }.getOrElse(Map.empty))
 
   /** DELETE documents from an [[appendLshState]] dir — the tombstone path
     * for the text-LSH pillar: the engine's own curation (substring
@@ -773,27 +752,10 @@ object Dedup {
   def deleteFromLshState(
       spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
       deleteTag: Option[Long] = None): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("bands", "reps", "members", "tombstones"))
-    StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
-    val del = ids.select(col(idCol).as("id")).distinct()
-    deleteTag match {
-      case Some(t) => // partition overwrite is idempotent by itself
-        del.write.mode("overwrite").parquet(s"${StateIO.tablePath(spark, dir, "tombstones")}/delete_id=$t")
-      case None =>
-        val fresh = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-          case Some(tb) => materialize(
-            del.join(tb.select(col("id")), Seq("id"), "left_anti"))
-          case None => del
-        }
-        fresh.write.mode("append").parquet(StateIO.tablePath(spark, dir, "tombstones"))
-    }
-  }
+    StatePillar.Lsh.delete(spark, dir, ids, col(idCol), deleteTag)
 
-  /** Shared state-dir compaction engine ([[compactLshState]],
-    * [[Similarity.compactIvfState]], [[Profile.compactStatsState]],
-    * [[Index.compactPostingsState]]): rewrite each `(table, dedup?)`
+  /** Shared state-dir compaction engine ([[StatePillar.compact]],
+    * [[Similarity.compactGraphState]]): rewrite each `(table, dedup?)`
     * into ~targetBytes files with the backup-swap rename discipline
     * documented on [[compactLshState]]. `dedup = true` distinct()s rows
     * during the rewrite (for tables where historical duplicates are
@@ -806,7 +768,10 @@ object Dedup {
     * compaction. `extraPartitionCols` names partition levels BELOW those
     * that the rewrite must preserve (e.g. the postings state's term
     * bucket — flattening it would silently turn partition-pruned lookups
-    * into full-index scans). */
+    * into full-index scans). The caller runs the write guard first
+    * ([[StatePillar.checkWritable]]): a leftover `__compact_bak` means an
+    * earlier compaction crashed between its two renames, and rewriting
+    * over it would silently corrupt the table. */
   private[ext] def compactStateTables(
       spark: SparkSession, dir: String, tables: Seq[(String, Boolean)],
       targetBytes: Long,
@@ -828,17 +793,6 @@ object Dedup {
       extraPartitionCols: Seq[String] = Nil,
       transforms: Map[String, DataFrame => DataFrame] = Map.empty): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
-    // a leftover backup means a previous compaction crashed BETWEEN its
-    // two renames — the live table may be the stale tmp or missing
-    // entirely; compacting (or appending) over that silently corrupts.
-    // Fail fast with the recovery step instead.
-    tables.foreach { case (table, _) =>
-      val bak = new org.apache.hadoop.fs.Path(dir, s"${table}__compact_bak")
-      val fs = bak.getFileSystem(hconf)
-      require(!fs.exists(bak),
-        s"found $bak — a previous compaction crashed mid-swap; restore it " +
-          s"over $dir/$table (verify contents first) before compacting again")
-    }
     def rewriteOne(table: String, dedup: Boolean): Unit = {
       // resolve through the dir's manifest: a previously-versioned
       // table's live content is in its __vNNNN dir, not the plain path
@@ -1070,20 +1024,9 @@ object Dedup {
     // band-matching (its rep is dropped via the surviving-member
     // semi-join) — a new byte-identical doc then signs fresh instead of
     // matching a ghost. Small anti-join until compaction applies them.
-    val tombs = StateIO.readTableIfExists(spark, stateDir, "tombstones")
-      .map { tbRaw =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", dt, stateDir, "tombstones")
-          case None => tbRaw
-        }
-        tb.select(col("id"))
-      }
-    val corpusMembersAll = readState("members").select(col("id"), col("rid"))
-    val corpusMembers = tombs match {
-      case Some(tb) => corpusMembersAll.join(tb, Seq("id"), "left_anti")
-      case None => corpusMembersAll
-    }
+    val tombs = StatePillar.Lsh.tombstones(spark, stateDir, asOf.map(_._2))
+    val corpusMembers = StatePillar.Lsh.minus(tombs)(
+      readState("members").select(col("id"), col("rid")))
     val corpusRepsAll = readState("reps")
       .select(col("fp"), col("rid"), col("text"))
     val corpusReps = tombs match {
@@ -1656,8 +1599,7 @@ object Dedup {
       StateIO.withWriterLock(sigs.sparkSession, dir) {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = sigs.sparkSession
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("sigs", "bands", "tombstones"))
+    StatePillar.Fp.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, batchTag, "append")
     checkFpMeta(spark, dir, buckets, writeIfAbsent = true)
     val rows = materialize(sigs.select(col(idCol).cast("long").as("id"),
@@ -1741,20 +1683,8 @@ object Dedup {
       "batch_id", asOf.map(_._1))
       .filter(col("bkt").isin(probed: _*)) // partition-pruned
       .select(col("id"), col("sig"), col("band"), col("word"))
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map { tbRaw =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", dt, dir, "tombstones")
-          case None => tbRaw
-        }
-        tb.select(col("id"))
-      }
-    val live = tombs match {
-      case Some(tb) => stateBands.join(tb, Seq("id"), "left_anti")
-      case None => stateBands
-    }
-    live.join(bBands, Seq("band", "word"))
+    StatePillar.Fp.live(spark, dir, stateBands, asOf.map(_._2))
+      .join(bBands, Seq("band", "word"))
       .filter(col("id") =!= col("new_id"))
       .select(col("new_id"), col("id").as("old_id"),
         bit_count(col("sig").bitwiseXOR(col("nsig"))).cast("long")
@@ -1772,25 +1702,8 @@ object Dedup {
   def deleteFromFpState(
       spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
       deleteTag: Option[Long] = None): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("sigs", "bands", "tombstones"))
-    StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
-    val del = ids.select(col(idCol).cast("long").as("id")).distinct()
-    deleteTag match {
-      case Some(t) =>
-        del.write.mode("overwrite").parquet(
-          s"${StateIO.tablePath(spark, dir, "tombstones")}/delete_id=$t")
-      case None =>
-        val fresh = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-          case Some(tb) => materialize(
-            del.join(tb.select(col("id")), Seq("id"), "left_anti"))
-          case None => del
-        }
-        fresh.write.mode("append")
-          .parquet(StateIO.tablePath(spark, dir, "tombstones"))
-    }
-  }
+    StatePillar.Fp.delete(spark, dir, ids, col(idCol).cast("long"),
+      deleteTag)
 
   /** Compact an [[appendFpState]] dir in place — the shared compaction
     * engine over the fingerprint pillar's tables, with tombstones
@@ -1801,18 +1714,9 @@ object Dedup {
   def compactFpState(
       spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map(tb => materialize(tb.select(col("id"))))
-    val dropTombed: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) => df.join(tb, Seq("id"), "left_anti")
-      case None => df
-    }
-    compactStateTables(spark, dir,
-      Seq("sigs" -> true, "bands" -> true, "tombstones" -> true),
-      targetBytes, extraPartitionCols = Seq("bkt"),
-      transforms = Map("sigs" -> dropTombed, "bands" -> dropTombed))
-  }
+    StatePillar.Fp.compact(spark, dir, Seq("sigs" -> true, "bands" -> true),
+      targetBytes, dropFrom = Seq("sigs", "bands"),
+      extraPartitionCols = Seq("bkt"))
 
   /** Eval-set decontamination: flag every corpus document sharing at least
     * one word `n`-gram with the eval set — the standard benchmark-leakage

@@ -277,9 +277,7 @@ object Index {
       positions: Boolean = false): Unit =
       StateIO.withWriterLock(batch.sparkSession, dir) {
     val spark = batch.sparkSession
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("postings", "totals", "docs", "tombstones", "tomb_totals",
-        "positions"))
+    StatePillar.Postings.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, batchTag, "append")
     // optional POSITIONAL sidecar — what [[phraseSearchFromState]] reads:
     // (id, pos, term) per token occurrence, term-bucketed like the
@@ -419,9 +417,7 @@ object Index {
       ids: DataFrame, idCol: String,
       deleteTag: Option[Long] = None): Unit =
       StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("postings", "totals", "docs", "tombstones", "tomb_totals",
-        "positions"))
+    StatePillar.Postings.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
     val del = ids.select(col(idCol).as("id")).distinct()
     val docRows = StateIO.readTableIfExists(spark, dir, "docs").getOrElse(
@@ -502,15 +498,13 @@ object Index {
     * ([[graft.ext.Dedup.compactLshState]]). */
   def compactPostingsState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetBytes: Long = 128L << 20): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    // apply tombstones PHYSICALLY during the rewrite: postings rows of
-    // deleted ids drop out. The tombstones + tomb_totals tables are
-    // KEPT (compacted, not cleared): the batch totals partitions still
-    // count the deleted docs — clearing the correction would silently
-    // re-inflate the BM25 corpus constants — and re-applying a tombstone
-    // to already-gone rows is a no-op, so reads stay correct through a
-    // crash at any point here. The `docs` sidecar keeps its tombstoned
+      targetBytes: Long = 128L << 20): Unit = {
+    // apply tombstones PHYSICALLY during the rewrite
+    // ([[StatePillar.compact]]): postings rows of deleted ids drop out.
+    // The tomb_totals table is KEPT (compacted, not cleared) like the
+    // tombstones: the batch totals partitions still count the deleted
+    // docs — clearing the correction would silently re-inflate the BM25
+    // corpus constants. The `docs` sidecar keeps its tombstoned
     // (id, dl) rows (it is 16 bytes/doc — narrow by design): a TAGGED
     // delete replayed after compaction re-derives its totals correction
     // from the sidecar, and dropping the rows would make the replay find
@@ -518,28 +512,14 @@ object Index {
     // silently re-inflating N/avgdl while batch totals still count the
     // deleted docs. Sidecar rows of deleted ids are inert everywhere
     // else (only the delete path reads the sidecar).
-    // MATERIALIZED, not a lazy file read: the tombstones table itself is
-    // swapped mid-sequence, and the positions table — compacted AFTER
-    // that swap — re-executes this plan. A lazy plan would then chase
-    // the pre-swap file listing into FILE_NOT_EXIST. Tombstones are
-    // small by design (ids only), so the snapshot is cheap.
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map(tb => Dedup.materialize(tb.select(col("id"))))
-    val dropDeleted: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) => df.join(tb, Seq("id"), "left_anti")
-      case None => df
-    }
     val posTable =
-      if (StateIO.pathExists(spark, s"$dir/positions"))
-        Seq("positions" -> false)
+      if (StateIO.pathExists(spark, s"$dir/positions")) Seq("positions")
       else Nil
-    Dedup.compactStateTables(spark, dir,
+    StatePillar.Postings.compact(spark, dir,
       Seq("postings" -> false, "docs" -> false, "totals" -> false,
-        "tombstones" -> true, "tomb_totals" -> false) ++ posTable,
-      targetBytes,
-      extraPartitionCols = Seq("bucket"),
-      transforms = Map("postings" -> dropDeleted) ++
-        posTable.map { case (t, _) => t -> dropDeleted }.toMap)
+        "tomb_totals" -> false) ++ posTable.map(_ -> false),
+      targetBytes, dropFrom = "postings" +: posTable,
+      extraPartitionCols = Seq("bucket"))
   }
 
   /** HISTORY-RETENTION GC for an [[appendPostingsState]] dir — the
@@ -592,8 +572,6 @@ object Index {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       floor: Long): Unit =
       StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      StatePillar.Postings.healthTables)
     val post = spark.read.parquet(StateIO.tablePath(spark, dir, "postings"))
     require(post.columns.contains("batch_id"),
       s"history truncation needs a TAGGED state: $dir/postings has no " +
@@ -809,16 +787,7 @@ object Index {
     // tombstones: deleted docs' postings stop scoring immediately (the
     // anti-join is small — tombstones are few until compaction applies
     // them physically, after which this is a no-op)
-    StateIO.readTableIfExists(spark, dir, "tombstones") match {
-      case Some(tbRaw) =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            asOfCut(tbRaw, "delete_id", dt, dir, "tombstones")
-          case None => tbRaw
-        }
-        pruned.join(tb.select(col("id")), Seq("id"), "left_anti")
-      case None => pruned
-    }
+    StatePillar.Postings.live(spark, dir, pruned, asOf.map(_._2))
   }
 
   /** [[phraseSearch]] answered from the persisted POSITIONAL sidecar
@@ -877,16 +846,7 @@ object Index {
         StateIO.asOfCut(prunedRaw, "batch_id", bt, dir, "positions")
       case None => prunedRaw
     }
-    val base = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-      case Some(tbRaw) =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", dt, dir, "tombstones")
-          case None => tbRaw
-        }
-        pruned.join(tb.select(col("id")), Seq("id"), "left_anti")
-      case None => pruned
-    }
+    val base = StatePillar.Postings.live(spark, dir, pruned, asOf.map(_._2))
     val starts = phrase.zipWithIndex.map { case (t, i) =>
       base.filter(col("term") === t)
         .select(col("id"), (col("pos") - i).as("graft_start"))

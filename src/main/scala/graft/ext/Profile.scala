@@ -257,8 +257,7 @@ object Profile {
       batchTag: Option[Long] = None): Unit =
       StateIO.withWriterLock(batch.sparkSession, dir) {
     val spark = batch.sparkSession
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("stats", "stats_deltas"))
+    StatePillar.Stats.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, batchTag, "append")
     val rows = batch
       .select(col(grpCol).as("grp"), md5(col(textCol)).as("graft_fp"),
@@ -379,8 +378,7 @@ object Profile {
       srcBatchCol: Option[String] = None): Unit =
       StateIO.withWriterLock(removed.sparkSession, dir) {
     val spark = removed.sparkSession
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("stats", "stats_deltas"))
+    StatePillar.Stats.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, deleteTag,
       "delete")
     // `srcBatchCol` (the append batch each removed doc was loaded in, if
@@ -412,6 +410,6 @@ object Profile {
   def compactStatsState(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Unit =
-    Dedup.compactStateTables(spark, dir,
+    StatePillar.Stats.compact(spark, dir,
       Seq("stats" -> false, "stats_deltas" -> false), targetBytes)
 }

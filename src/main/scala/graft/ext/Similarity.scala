@@ -501,8 +501,7 @@ object Similarity {
     // read the wrong cells). Compaction remnants likewise fail fast: a
     // cells table without live non-empty centroids is a crash window, not
     // a fresh dir.
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("centroids", "cells", "tombstones"))
+    StatePillar.Ivf.checkWritable(spark, dir)
     StateIO.checkTagAboveFloor(spark, dir, batchTag, "append")
     val centsOpt = StateIO.readTableIfExists(spark, dir, "centroids")
       .filter(_.head(1).nonEmpty)
@@ -586,16 +585,7 @@ object Similarity {
     val untagged = excludeTag
       .filter(_ => cut.columns.contains("batch_id"))
       .map(tag => cut.filter(col("batch_id") =!= tag)).getOrElse(cut)
-    StateIO.readTableIfExists(spark, dir, "tombstones") match {
-      case Some(tbRaw) =>
-        val tb = asOf match {
-          case Some((_, dt)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", dt, dir, "tombstones")
-          case None => tbRaw
-        }
-        untagged.join(tb.select(col("vid")), Seq("vid"), "left_anti")
-      case None => untagged
-    }
+    StatePillar.Ivf.live(spark, dir, untagged, asOf.map(_._2))
   }
 
   def ivfTopKFromState(
@@ -1218,14 +1208,8 @@ object Similarity {
     // vectors' cells with a bucket-pruned read instead of a corpus
     // scan; sub-partitioned by batch_id so the batch delta's append is
     // idempotent by partition replace
-    val tombsLive = StateIO.readTableIfExists(spark, ivfDir, "tombstones")
-    val homesRaw = rawCells.select(col("vid"), col("cid").as("home_cid"),
-      col("batch_id"))
-    val homes = tombsLive match {
-      case Some(tb) => homesRaw.join(tb.select(col("vid")), Seq("vid"),
-        "left_anti")
-      case None => homesRaw
-    }
+    val homes = StatePillar.Ivf.live(spark, ivfDir,
+      rawCells.select(col("vid"), col("cid").as("home_cid"), col("batch_id")))
     val writeHomes: () => Unit = () =>
       homes.withColumn("vb",
           pmod(col("vid"), lit(GraphHomeBuckets)).cast("int"))
@@ -1323,14 +1307,10 @@ object Similarity {
           s"watermark $upto and $newBatchTag — apply them in order (the " +
           "graph would silently miss their vectors otherwise)")
     }
-    val tombs = StateIO.readTableIfExists(spark, ivfDir, "tombstones")
-    val batchRaw = rawCells.filter(col("batch_id") === newBatchTag)
-      .select(col("cid"), col("vid"), col("v"), col("cn"))
-    val newRows = graft.ext.Dedup.materialize(tombs match {
-      case Some(tb) => batchRaw.join(tb.select(col("vid")), Seq("vid"),
-        "left_anti")
-      case None => batchRaw
-    })
+    val tombs = StatePillar.Ivf.tombstones(spark, ivfDir)
+    val newRows = graft.ext.Dedup.materialize(StatePillar.Ivf.minus(tombs)(
+      rawCells.filter(col("batch_id") === newBatchTag)
+        .select(col("cid"), col("vid"), col("v"), col("cn"))))
     if (newRows.head(1).isEmpty) {
       // an empty batch moves only the watermark
       StateIO.publishSmallFile(spark, graphDir, GraphUptoFile,
@@ -1376,11 +1356,7 @@ object Similarity {
     // already appended the batch's probe rows derives the SAME sets —
     // and the tombstones, so probe rows orphaned by a crashed delete
     // delta (see knnGraphDeleteDeltaFromState) stay inert
-    val dropTombs: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) =>
-        df.join(tb.select(col("vid")).distinct(), Seq("vid"), "left_anti")
-      case None => df
-    }
+    val dropTombs = StatePillar.Ivf.minus(tombs.map(_.distinct())) _
     val probesAtProbed = dropTombs(spark.read.parquet(probesPath)
       .filter(col("probe_cid").isin(probedCells: _*))) // partition-pruned
       .join(newVids, Seq("vid"), "left_anti")
@@ -2043,23 +2019,10 @@ object Similarity {
   def compactIvfState(
       spark: SparkSession, dir: String,
       targetBytes: Long = 128L << 20): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    // apply tombstones physically; KEEP the tombstones table (re-applying
-    // to already-gone rows is a no-op, so reads stay correct through a
-    // crash anywhere here, and the never-reuse-a-deleted-id contract
-    // still needs the record)
-    // materialized so no table rewritten later in the sequence re-reads
-    // the tombstones files after their own swap replaced them
-    val tombs = StateIO.readTableIfExists(spark, dir, "tombstones")
-      .map(tb => graft.ext.Dedup.materialize(tb.select(col("vid"))))
-    val dropDeleted: DataFrame => DataFrame = df => tombs match {
-      case Some(tb) => df.join(tb, Seq("vid"), "left_anti")
-      case None => df
-    }
-    graft.ext.Dedup.compactStateTables(spark, dir,
-      Seq("centroids" -> false, "cells" -> false, "tombstones" -> true),
-      targetBytes, transforms = Map("cells" -> dropDeleted))
-  }
+    // applies tombstones physically ([[StatePillar.compact]])
+    StatePillar.Ivf.compact(spark, dir,
+      Seq("centroids" -> false, "cells" -> false), targetBytes,
+      dropFrom = Seq("cells"))
 
   /** DELETE vectors from an [[appendIvfState]] dir — the tombstone path
     * for the vector pillar: the engine's own semantic dedup and
@@ -2080,23 +2043,7 @@ object Similarity {
   def deleteFromIvfState(
       spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
       deleteTag: Option[Long] = None): Unit =
-      StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("centroids", "cells", "tombstones"))
-    StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
-    val del = ids.select(col(idCol).as("vid")).distinct()
-    deleteTag match {
-      case Some(t) =>
-        del.write.mode("overwrite").parquet(s"${StateIO.tablePath(spark, dir, "tombstones")}/delete_id=$t")
-      case None =>
-        val fresh = StateIO.readTableIfExists(spark, dir, "tombstones") match {
-          case Some(tb) => graft.ext.Dedup.materialize(
-            del.join(tb.select(col("vid")), Seq("vid"), "left_anti"))
-          case None => del
-        }
-        fresh.write.mode("append").parquet(StateIO.tablePath(spark, dir, "tombstones"))
-    }
-  }
+    StatePillar.Ivf.delete(spark, dir, ids, col(idCol), deleteTag)
 
   /** RECLUSTER an [[appendIvfState]] dir in place — the operator that
     * ACTS on [[ivfStateAudit]]'s `retrain_recommended` verdict (until
@@ -2149,8 +2096,7 @@ object Similarity {
   private[graft] def reclusterIvfState(
       spark: SparkSession, dir: String, crashAfterApplied: Int): Unit =
       StateIO.withWriterLock(spark, dir) {
-    StateIO.checkNoCompactRemnants(spark, dir,
-      Seq("centroids", "cells", "tombstones"))
+    StatePillar.Ivf.checkWritable(spark, dir)
     val meta =
       try spark.read.schema("k LONG, iters LONG, dim LONG, train_sample LONG")
         .json(s"$dir/_meta").head()

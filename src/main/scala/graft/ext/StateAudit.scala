@@ -31,20 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object StateAudit {
 
-  private def minusTombstones(
-      spark: SparkSession, dir: String, df: DataFrame,
-      asOf: Option[(Long, Long)] = None): DataFrame =
-    StateIO.readTableIfExists(spark, dir, "tombstones") match {
-      case Some(tbRaw) =>
-        val tb = asOf match {
-          case Some((_, d)) =>
-            StateIO.asOfCut(tbRaw, "delete_id", d, dir, "tombstones")
-          case None => tbRaw
-        }
-        df.join(tb.select(col("id")), Seq("id"), "left_anti")
-      case None => df
-    }
-
   /** The shared live-id derivation: the pillar's id-bearing table
     * (members / docs / doc_tokens) minus tombstones, optionally under
     * an as-of cut — which makes the audit itself time-travel ("which
@@ -53,7 +39,7 @@ object StateAudit {
     * cut the pillar reads use). As-of bounds below a truncated
     * history's floor refuse ([[StatePillar.truncate]]). */
   private def liveIds(
-      spark: SparkSession, dir: String, table: String,
+      spark: SparkSession, pillar: StatePillar, dir: String, table: String,
       asOf: Option[(Long, Long)]): DataFrame = {
     StateIO.checkNoSwapInProgress(spark, dir)
     val rows = spark.read.parquet(StateIO.tablePath(spark, dir, table))
@@ -66,7 +52,7 @@ object StateAudit {
         StateIO.asOfCut(rows, "batch_id", b, dir, table)
       case None => rows
     }
-    minusTombstones(spark, dir, base.select(col("id")), asOf)
+    pillar.live(spark, dir, base.select(col("id")), asOf.map(_._2))
   }
 
   /** Live doc ids of an LSH text state ([[Dedup.appendLshState]]):
@@ -74,14 +60,15 @@ object StateAudit {
     * survival (a doc whose GROUP lost its rep to deletes is still
     * live itself). */
   def lshLiveIds(spark: SparkSession, dir: String): DataFrame =
-    liveIds(spark, dir, "members", None)
+    liveIds(spark, StatePillar.Lsh, dir, "members", None)
 
   /** [[lshLiveIds]] as the state stood after (append `asOfBatch`,
     * delete `asOfDelete`) — the tagged-partition cut of x132's
     * contract, ids only. */
   def lshLiveIdsAsOf(spark: SparkSession, dir: String,
       asOfBatch: Long, asOfDelete: Long = 0L): DataFrame =
-    liveIds(spark, dir, "members", Some((asOfBatch, asOfDelete)))
+    liveIds(spark, StatePillar.Lsh, dir, "members",
+      Some((asOfBatch, asOfDelete)))
 
   /** Live doc ids of a postings state ([[Index.appendPostingsState]]):
     * the (id, dl) docs sidecar minus tombstones. The sidecar keeps
@@ -89,36 +76,39 @@ object StateAudit {
     * re-derive from them), so the anti-join — the read-side liveness
     * rule — is applied here exactly as the delete path applies it. */
   def postingsLiveIds(spark: SparkSession, dir: String): DataFrame =
-    liveIds(spark, dir, "docs", None)
+    liveIds(spark, StatePillar.Postings, dir, "docs", None)
 
   /** [[postingsLiveIds]] as of (append `asOfBatch`, delete
     * `asOfDelete`) — x125's snapshot contract, ids only. */
   def postingsLiveIdsAsOf(spark: SparkSession, dir: String,
       asOfBatch: Long, asOfDelete: Long = 0L): DataFrame =
-    liveIds(spark, dir, "docs", Some((asOfBatch, asOfDelete)))
+    liveIds(spark, StatePillar.Postings, dir, "docs",
+      Some((asOfBatch, asOfDelete)))
 
   /** Live doc ids of a tokenizer state ([[Bpe.appendTokenizerState]]):
     * the (id, bpe_tokens) sidecar minus tombstones —
     * [[Bpe.readDocTokens]]'s liveness rule, ids only. */
   def tokenizerLiveIds(spark: SparkSession, dir: String): DataFrame =
-    liveIds(spark, dir, "doc_tokens", None)
+    liveIds(spark, StatePillar.Tokenizer, dir, "doc_tokens", None)
 
   /** [[tokenizerLiveIds]] as of (append `asOfBatch`, delete
     * `asOfDelete`) — x131's snapshot contract, ids only. */
   def tokenizerLiveIdsAsOf(spark: SparkSession, dir: String,
       asOfBatch: Long, asOfDelete: Long = 0L): DataFrame =
-    liveIds(spark, dir, "doc_tokens", Some((asOfBatch, asOfDelete)))
+    liveIds(spark, StatePillar.Tokenizer, dir, "doc_tokens",
+      Some((asOfBatch, asOfDelete)))
 
   /** Live ids of a fingerprint state ([[Dedup.appendFpState]]): the
     * (id, sig) corpus record minus tombstones — the pair reads'
     * liveness rule, ids only. */
   def fpLiveIds(spark: SparkSession, dir: String): DataFrame =
-    liveIds(spark, dir, "sigs", None)
+    liveIds(spark, StatePillar.Fp, dir, "sigs", None)
 
   /** [[fpLiveIds]] as of (append `asOfBatch`, delete `asOfDelete`). */
   def fpLiveIdsAsOf(spark: SparkSession, dir: String,
       asOfBatch: Long, asOfDelete: Long = 0L): DataFrame =
-    liveIds(spark, dir, "sigs", Some((asOfBatch, asOfDelete)))
+    liveIds(spark, StatePillar.Fp, dir, "sigs",
+      Some((asOfBatch, asOfDelete)))
 
   /** What CHANGED between two versions of a state — the diff view over
     * the same tagged history the as-of reads cut: one row per document

@@ -2,10 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared IO discipline for the persisted-state pillars (LSH text state,
-  * IVF vector state, stats sketches, term-bucketed postings).
+/** Shared IO discipline for the six persisted-state pillars declared in
+  * [[StatePillar]] (LSH text state, fingerprints, term-bucketed postings,
+  * tokenizer counts, stats sketches, IVF vectors) and the kNN graph state.
   *
-  * Two hazards every state reader/appender shares:
+  * Two hazards every state reader/writer shares:
   *
   *  1. **Catch-all reads flip failures into "no state yet".** Wrapping a
   *     state read in `Try(...).toOption` treats a transient FS error, a
@@ -20,10 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  2. **Compaction-crash remnants look like fresh or partial dirs.** The
   *     backup-swap rename ([[Dedup.compactStateTables]]) can crash between
   *     its two renames, leaving `<table>__compact_bak` present and the
-  *     live table stale or missing. An append that doesn't look for the
+  *     live table stale or missing. A write that doesn't look for the
   *     backup happily writes over the wreckage (or retrains from scratch).
   *     [[checkNoCompactRemnants]] fails fast with the recovery step
-  *     instead, and is called by every pillar's append entry point.
+  *     instead; every pillar's append, delete, compact, recluster and
+  *     truncate entry runs it first ([[StatePillar.checkWritable]]).
   *
   * ==Filesystem contract (read this before deploying)==
   *
@@ -73,13 +75,15 @@ private[graft] object StateIO {
           if e.getCondition == "PATH_NOT_FOUND" => None
     }
 
-  /** Fail-fast guard against compaction-crash remnants, shared by every
-    * state pillar's append path: a `<table>__compact_bak` directory means
-    * a previous [[Dedup.compactStateTables]] crashed between its two
-    * renames — the live table may be stale, partial, or missing, and an
-    * append over that silently corrupts the state (e.g. a missing
+  /** Fail-fast write guard against crash remnants, shared by every state
+    * write entry (append, delete, compact, recluster, truncate, clone and
+    * fast-forward sources): a `<table>__compact_bak` directory means a
+    * previous [[Dedup.compactStateTables]] crashed between its two
+    * renames — the live table may be stale, partial, or missing, and a
+    * write over that silently corrupts the state (e.g. a missing
     * `centroids` table would retrain k-means and invalidate every
-    * existing cell assignment). Restore the backup first. */
+    * existing cell assignment). Restore the backup first. Also refuses a
+    * dir mid-swap or mid-catch-up ([[checkNoSwapInProgress]]). */
   def checkNoCompactRemnants(
       spark: SparkSession, dir: String, tables: Seq[String]): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
@@ -88,14 +92,14 @@ private[graft] object StateIO {
       val fs = bak.getFileSystem(hconf)
       require(!fs.exists(bak),
         s"found $bak — a compaction crashed mid-swap; restore it over " +
-          s"$dir/$t (verify contents first) before appending")
+          s"$dir/$t (verify contents first) before writing to the state")
     }
     checkNoSwapInProgress(spark, dir)
   }
 
   /** Name of the commit-marker file a [[swapInTables]] publishes between
     * staging and applying. While it exists the state dir may mix old and
-    * new table fits — every reader and every append/compact entry point
+    * new table fits — every reader and every write entry point
     * fails fast on it until [[recoverSwap]] rolls the swap forward. */
   private[graft] val SwapCommitMarker = "_swap_commit"
 
@@ -818,7 +822,8 @@ private[graft] object StateIO {
     * additionally folds sub-floor tombstones into the sub-floor postings
     * physically; the other pillars collapse PURELY, which is exactly
     * as-of-preserving because the collapsed tombstones keep subtracting
-    * at read time the way they always did).
+    * at read time the way they always did). The caller runs the write
+    * guard first ([[StatePillar.checkWritable]]).
     *
     * Collapses every version with tag ≤ `floor` into ONE base version
     * tagged `floor`: rows re-tag (a pure partition move — content
@@ -845,15 +850,9 @@ private[graft] object StateIO {
     * same cadence. Nothing collects to the driver but the max tag. */
   private[graft] def truncateHistory(
       spark: SparkSession, dir: String, floor: Long,
-      tables: Seq[TruncTable],
-      extraRemnantChecks: Seq[String] = Nil): Unit =
+      tables: Seq[TruncTable]): Unit =
       withWriterLock(spark, dir) {
     import org.apache.spark.sql.functions.{col, greatest, lit, max}
-    // extraRemnantChecks: tables truncation never rewrites (frozen
-    // centroids / merges) whose crashed-compaction backup still means
-    // the dir is mid-recovery — nothing should rewrite around it
-    checkNoCompactRemnants(spark, dir,
-      tables.map(_.name) ++ extraRemnantChecks)
     val loaded: Seq[(TruncTable, DataFrame)] = tables.flatMap { t =>
       val df = readTableIfExists(spark, dir, t.name)
       require(df.isDefined || !t.required,

@@ -1,14 +1,26 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** One persisted state pillar, declared once: its tagged tables, the
-  * version-free artifacts a branch raw-copies, and the table whose
-  * `batch_id` tags bound a keep-last-N policy. Every lifecycle verb —
-  * recover, truncate, retain, clone, fast-forward — is written once
-  * below, over this descriptor, on the shared [[StateIO]] cores; what
-  * really differs per pillar (append, delete, compact, the reads) stays
-  * with the pillar's own object.
+  * version-free artifacts a branch raw-copies, the table whose
+  * `batch_id` tags bound a keep-last-N policy, and the key column of its
+  * `tombstones` table. Written once below, over this descriptor:
+  *
+  *  - the lifecycle verbs — recover, truncate, retain, clone,
+  *    fast-forward — on the shared [[StateIO]] cores;
+  *  - the write guard ([[checkWritable]]) every append, delete, compact,
+  *    recluster and truncate entry runs first;
+  *  - the tombstone protocol: the delete ([[delete]]), the live-row
+  *    filter every read applies ([[live]], [[tombstones]]) and the
+  *    compaction drop ([[compact]]).
+  *
+  * What really differs per pillar stays with the pillar's own object:
+  * the appends, the reads' own joins, the `_meta` parameter checks, the
+  * compaction table lists (and LSH's dead-group drop), postings' and
+  * stats' delete corrections, and the graph's delete head and delete
+  * delta over the ivf tombstones.
   *
   * The registry ([[StatePillar.all]], [[StatePillar.get]]) is keyed by
   * the operator CLI's pillar names (`state <verb> <pillar> ...`). */
@@ -17,7 +29,12 @@ final class StatePillar private (
     private[graft] val tables: Seq[StateIO.TruncTable],
     rawCopies: Seq[String],
     retentionTable: String,
+    tombstoneKey: Option[String] = Some("id"),
     truncateOverride: Option[(SparkSession, String, Long) => Unit] = None) {
+  import StatePillar.Tombstones
+
+  require(tombstoneKey.isDefined == tables.exists(_.name == Tombstones),
+    s"pillar $name: a tombstone key needs a $Tombstones table and vice versa")
 
   /** The raw copies that are tables (frozen centroids / merges): a
     * truncation never rewrites them, but their crashed-compaction backup
@@ -25,15 +42,105 @@ final class StatePillar private (
   private val frozenTables = rawCopies.filterNot(_ == "_meta")
 
   /** Every table the pillar persists: what the health report covers and
-    * what a truncation checks for crashed-compaction remnants. */
+    * what the write guard checks for crashed-compaction remnants. */
   val healthTables: Seq[String] = tables.map(_.name) ++ frozenTables
+
+  /** The write guard: refuse a crashed compaction's `<table>__compact_bak`
+    * for any of [[healthTables]], and a dir mid-swap (`_swap_commit`) or
+    * mid-catch-up (`_ff_pending`). Every append, delete, compact,
+    * recluster and truncate entry of the pillar runs it first, so a table
+    * added to the descriptor is guarded with no other edit. */
+  private[graft] def checkWritable(spark: SparkSession, dir: String): Unit =
+    StateIO.checkNoCompactRemnants(spark, dir, healthTables)
+
+  /** The tombstoned keys, lazily, as one column named by the tombstone
+    * key — cut to delete tags `<= asOfDelete` when given (refusing bounds
+    * below the history floor) — or None when nothing was ever deleted. */
+  private[graft] def tombstones(
+      spark: SparkSession, dir: String,
+      asOfDelete: Option[Long] = None): Option[DataFrame] =
+    tombstoneKey.flatMap { key =>
+      StateIO.readTableIfExists(spark, dir, Tombstones).map { raw =>
+        asOfDelete.fold(raw)(
+          StateIO.asOfCut(raw, "delete_id", _, dir, Tombstones))
+          .select(col(key))
+      }
+    }
+
+  /** `rows` minus the keys in `tombs` (a left-anti join on the tombstone
+    * key); `rows` itself when there are none. */
+  private[graft] def minus(tombs: Option[DataFrame])(
+      rows: DataFrame): DataFrame =
+    (tombstoneKey zip tombs).fold(rows) { case (key, tb) =>
+      rows.join(tb, Seq(key), "left_anti")
+    }
+
+  /** The live-row filter every read shares: `rows` minus the current
+    * tombstones, or those as of delete `asOfDelete`. Stays lazy — a
+    * small anti-join until compaction applies the tombstones. */
+  private[graft] def live(
+      spark: SparkSession, dir: String, rows: DataFrame,
+      asOfDelete: Option[Long] = None): DataFrame =
+    minus(tombstones(spark, dir, asOfDelete))(rows)
+
+  /** The tombstone write behind `deleteFrom*State`: O(|ids|), no state
+    * table is read or rewritten; every read subtracts through [[live]]
+    * and [[compact]] applies the tombstones physically. Tagged deletes
+    * overwrite their own `delete_id=N` partition (at-least-once safe);
+    * untagged deletes anti-join the keys already tombstoned, so a blind
+    * re-run is a no-op. A deleted key must never be re-appended. */
+  private[graft] def delete(
+      spark: SparkSession, dir: String, ids: DataFrame, idCol: Column,
+      deleteTag: Option[Long]): Unit =
+      StateIO.withWriterLock(spark, dir) {
+    checkWritable(spark, dir)
+    StateIO.checkTagAboveFloor(spark, dir, deleteTag, "delete")
+    val del = ids.select(idCol.as(tombstoneKey.get)).distinct()
+    val path = StateIO.tablePath(spark, dir, Tombstones)
+    deleteTag match {
+      case Some(t) =>
+        del.write.mode("overwrite").parquet(s"$path/delete_id=$t")
+      case None =>
+        // materialized: the append below lands in the table it read
+        val fresh = tombstones(spark, dir)
+          .fold(del)(tb => Dedup.materialize(minus(Some(tb))(del)))
+        fresh.write.mode("append").parquet(path)
+    }
+  }
+
+  /** The compaction behind `compact*State`: guard, snapshot the
+    * tombstones once, and rewrite `tables` plus the tombstones table with
+    * the shared engine ([[Dedup.compactStateTables]]), dropping tombstoned
+    * keys from `dropFrom`; `more` derives further rewrites from the
+    * snapshot. The snapshot is MATERIALIZED, not a lazy file read: the
+    * tombstones table is itself swapped mid-sequence, and a table
+    * compacted after that swap would chase the old listing into
+    * FILE_NOT_EXIST. The tombstones are kept (compacted): re-applying one
+    * to rows already gone is a no-op, so reads stay correct through a
+    * crash anywhere here, and the never-reuse-a-key contract still needs
+    * them. Run it offline. */
+  private[graft] def compact(
+      spark: SparkSession, dir: String, tables: Seq[(String, Boolean)],
+      targetBytes: Long, dropFrom: Seq[String] = Nil,
+      extraPartitionCols: Seq[String] = Nil,
+      more: Option[DataFrame] => Map[String, DataFrame => DataFrame] =
+        _ => Map.empty): Unit =
+      StateIO.withWriterLock(spark, dir) {
+    checkWritable(spark, dir)
+    val snapshot = tombstones(spark, dir).map(Dedup.materialize)
+    Dedup.compactStateTables(spark, dir,
+      tables ++ tombstoneKey.map(_ => Tombstones -> true), targetBytes,
+      extraPartitionCols,
+      dropFrom.map(_ -> minus(snapshot) _).toMap ++ more(snapshot))
+  }
 
   /** Complete a crashed multi-table swap (a truncation, recluster or
     * compaction that crashed after its `_swap_commit` marker published;
     * until the marker clears, every append/delete/compact/truncate entry
-    * fails fast). Returns true iff a crashed swap was found and rolled
-    * forward to the full new fit; false = nothing to do (safe to call
-    * blindly from an orchestrator's recovery path). */
+    * fails fast through [[checkWritable]]). Returns true iff a crashed
+    * swap was found and rolled forward to the full new fit; false =
+    * nothing to do (safe to call blindly from an orchestrator's recovery
+    * path). */
   def recover(spark: SparkSession, dir: String): Boolean =
     StateIO.recoverSwap(spark, dir)
 
@@ -42,11 +149,13 @@ final class StatePillar private (
     * tombstones keep subtracting at read time, so every still-legal as-of
     * read returns bit-identical results). */
   def truncate(spark: SparkSession, dir: String, floor: Long): Unit =
+      StateIO.withWriterLock(spark, dir) {
+    checkWritable(spark, dir)
     truncateOverride match {
       case Some(f) => f(spark, dir, floor)
-      case None => StateIO.truncateHistory(spark, dir, floor, tables,
-        extraRemnantChecks = frozenTables)
+      case None => StateIO.truncateHistory(spark, dir, floor, tables)
     }
+  }
 
   /** KEEP-LAST-N retention ([[StateIO.retentionFloor]] → [[truncate]]):
     * collapse history so only the newest `keepLastBatches` versions stay
@@ -84,7 +193,10 @@ final class StatePillar private (
 object StatePillar {
   import StateIO.TruncTable
 
-  private def tombstones = TruncTable("tombstones", "delete_id",
+  /** The table every tombstone pillar's deletes land in. */
+  private val Tombstones = "tombstones"
+
+  private def tombstoneTable = TruncTable(Tombstones, "delete_id",
     required = false)
 
   /** The text pillar ([[Dedup.appendLshState]]). Truncation re-tags
@@ -101,7 +213,7 @@ object StatePillar {
     TruncTable("reps", "batch_id"),
     TruncTable("bands", "batch_id"),
     TruncTable("members", "batch_id"),
-    tombstones), rawCopies = Seq("_meta"), retentionTable = "reps")
+    tombstoneTable), rawCopies = Seq("_meta"), retentionTable = "reps")
 
   /** The fingerprint pillar ([[Dedup.appendFpState]]). `bands` keeps its
     * `bkt` partition level below the batch tags everywhere (flattening it
@@ -111,7 +223,7 @@ object StatePillar {
   val Fp = new StatePillar("fp", Seq(
     TruncTable("sigs", "batch_id"),
     TruncTable("bands", "batch_id", extraPartitionCols = Seq("bkt")),
-    tombstones), rawCopies = Seq("_meta"), retentionTable = "sigs")
+    tombstoneTable), rawCopies = Seq("_meta"), retentionTable = "sigs")
 
   /** The postings pillar ([[Index.appendPostingsState]]) — the one pillar
     * with its own truncation ([[Index.collapsePostingsHistory]]): it folds
@@ -129,7 +241,7 @@ object StatePillar {
     TruncTable("docs", "batch_id"),
     TruncTable("totals", "batch_id"),
     TruncTable("positions", "batch_id", Seq("bucket"), required = false),
-    tombstones,
+    tombstoneTable,
     TruncTable("tomb_totals", "delete_id", required = false)),
     rawCopies = Nil, retentionTable = "docs",
     truncateOverride = Some((s, d, f) => Index.collapsePostingsHistory(s, d, f)))
@@ -143,7 +255,7 @@ object StatePillar {
     * retrained source refuses a fast-forward (re-clone). */
   val Tokenizer = new StatePillar("tokenizer", Seq(
     TruncTable("doc_tokens", "batch_id"),
-    tombstones), rawCopies = Seq("merges", "_meta"),
+    tombstoneTable), rawCopies = Seq("merges", "_meta"),
     retentionTable = "doc_tokens")
 
   /** The accounting pillar ([[Profile.appendStatsState]]). Truncation
@@ -159,7 +271,7 @@ object StatePillar {
   val Stats = new StatePillar("stats", Seq(
     TruncTable("stats", "batch_id"),
     TruncTable("stats_deltas", "delete_id", required = false)),
-    rawCopies = Nil, retentionTable = "stats")
+    rawCopies = Nil, retentionTable = "stats", tombstoneKey = None)
 
   /** The vector pillar ([[Similarity.appendIvfState]]). Every vector was
     * assigned ONCE against the frozen batch-1 centroids, so truncation
@@ -173,8 +285,8 @@ object StatePillar {
     * (re-clone). `recover` also rolls a crashed recluster forward. */
   val Ivf = new StatePillar("ivf", Seq(
     TruncTable("cells", "batch_id"),
-    tombstones), rawCopies = Seq("centroids", "_meta"),
-    retentionTable = "cells")
+    tombstoneTable), rawCopies = Seq("centroids", "_meta"),
+    retentionTable = "cells", tombstoneKey = Some("vid"))
 
   /** Every pillar. */
   val all: Seq[StatePillar] = Seq(Lsh, Postings, Tokenizer, Stats, Ivf, Fp)

@@ -208,14 +208,9 @@ object DedupStream {
             // (same filter rule as incrementalLshPairsFromState, which
             // handles the main path — this covers the short-doc
             // fingerprint path)
-            val tombs = graft.ext.StateIO
-              .readTableIfExists(spark, stateDir, "tombstones")
-              .map(_.select(col("id")))
-            val membersAll = stateTable("members")
-            val members = tombs match {
-              case Some(tb) => membersAll.join(tb, Seq("id"), "left_anti")
-              case None => membersAll
-            }
+            val tombs = graft.ext.StatePillar.Lsh.tombstones(spark, stateDir)
+            val members =
+              graft.ext.StatePillar.Lsh.minus(tombs)(stateTable("members"))
             val repsAll = stateTable("reps")
             val reps = tombs match {
               case Some(_) => repsAll.join(
