@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.json.GraftJsonStats
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -8,17 +9,20 @@ import org.apache.spark.sql.types._
   *
   * {{{
   * wholetext read → flatMap(detect+extract)      // one row per file → N records
-  *   → infer dynamic schema (spark.read.json)    // reference infer_schema A3/A4
+  *   → one statistics job: kind counts, per-key  // reference A1-A4
+  *     present_in / non-null counts and the
+  *     dynamic schema spark.read.json would infer
   *   → from_json pivot to the wide frame         // reference normalize N2/N3
   *   → prune artifacts, stamp total_items,       // N1, A1, N4, N5
   *     precedence-ordered rows, sorted columns
   * }}}
   *
   * Scale notes: extraction is embarrassingly parallel across files (flatMap,
-  * no shuffle); the dynamic schema needs one extra pass (inference action)
-  * exactly like `spark.read.json`; `total_items` is a driver-side `count()` +
-  * `lit`, never an unpartitioned window; the only shuffles are the tiny
-  * per-key stats aggregation and the final precedence sort.
+  * no shuffle); the statistics are one map-side fold over the cached records
+  * with one partial per partition merged on the driver, as Spark's own JSON
+  * inference does, so `process` runs one Spark job and the frame is lazy;
+  * `total_items` is the sum of the kind counts + `lit`, never an
+  * unpartitioned window; the only shuffle is the final precedence sort.
   */
 object Pipeline {
 
@@ -80,8 +84,10 @@ object Pipeline {
   }
 
   /** Process a batch of (filename, content) documents into the normalized
-    * wide frame + schema artifact + counts. Per-file isolation (SURVEY D-3:
-    * app.py semantics — no cross-run accumulation). */
+    * wide frame + schema artifact + counts. One call infers ONE schema and
+    * stamps ONE `total_items` over all its documents; nothing accumulates
+    * across calls. app.py's per-file isolation (SURVEY D-3) is therefore one
+    * call per document, which is how the API, `db` and watch call it. */
   def process(spark: SparkSession, files: Dataset[(String, String)]): Result = {
     import spark.implicits._
     val records = files.flatMap { case (file, content) =>
@@ -187,30 +193,35 @@ object Pipeline {
     assemble(spark, records)
   }
 
-  /** Shared downstream: dynamic-schema inference, pivot, stats, normalize. */
+  /** Shared downstream: the statistics job, pivot, normalize. */
   private def assemble(spark: SparkSession, recordsIn: Dataset[RecordRow]): Result = {
     import spark.implicits._
     val records = recordsIn.persist()
 
-    // A1 + A2 in ONE job: total is the sum of the per-kind counts.
-    val itemsByType = records.groupBy($"graft_kind").count()
-      .as[(String, Long)].collect().toMap
+    // A1-A4 in ONE job: the kind counts (total = their sum), per-key
+    // present_in / non-null counts and Spark's JSON schema inference
+    val stats = GraftJsonStats.compute(records.select($"graft_kind", $"graft_json"))
+    val itemsByType = stats.itemsByKind
     val total = itemsByType.values.sum
     if (total == 0) {
       records.unpersist()
       return Result(spark.emptyDataFrame, Map.empty, Map.empty, 0L)
     }
-
-    // A3/A4 — dynamic schema: Spark's native JSON inference over the record
-    // payloads (same two-pass infer-then-apply as spark.read.json).
-    val inferred = spark.read.json(records.select($"graft_json").as[String]).schema
+    val inferred = stats.schema
 
     val wide = records
       .withColumn("graft_rec", from_json($"graft_json", inferred))
       .select($"graft_file", $"graft_kind", $"graft_ordinal", $"graft_json",
         col("graft_rec.*"))
 
-    val fieldStats = computeFieldStats(spark, wide, inferred, total)
+    // A4 — present_in tells "key absent" from "key present with null value",
+    // which the pivoted frame alone cannot. nullable = key missing somewhere
+    // OR an explicit null value exists.
+    val fieldStats = inferred.fields.map { f =>
+      val present = stats.presentIn.getOrElse(f.name, 0L)
+      val nullable = present < total || stats.nonNull.getOrElse(f.name, 0L) < present
+      f.name -> FieldStats(Seq(pythonTypeName(f.dataType)), nullable, present)
+    }.toMap
 
     // N1 — prune extraction artifacts (AFTER stats, like the reference:
     // dynamic_schema.json legitimately contains fields the CSV lacks).
@@ -250,38 +261,6 @@ object Pipeline {
       case Some(f) if f.dataType == NullType => qcol(name).cast(StringType).as(name)
       case _ => qcol(name)
     }
-
-  /** A4 — per-field stats in two small aggregations:
-    *   - present_in: explode top-level JSON keys → groupBy key → count
-    *     (distinguishes "key absent" from "key present with null value",
-    *     which the pivoted frame alone cannot);
-    *   - non-null value counts: ONE pass of count(col) over all fields.
-    * nullable = key missing somewhere OR an explicit null value exists. */
-  private def computeFieldStats(
-      spark: SparkSession,
-      wide: DataFrame,
-      inferred: StructType,
-      total: Long): Map[String, FieldStats] = {
-    import spark.implicits._
-
-    val presentIn = wide
-      .select(explode(json_object_keys($"graft_json")).as("k"))
-      .groupBy($"k").count()
-      .as[(String, Long)].collect().toMap
-
-    val fields = inferred.fields.toSeq
-    val countsRow = wide.agg(
-      count(lit(1)).as("_n"),
-      fields.map(f => count(qcol(f.name)).as(f.name)): _*
-    ).collect()(0)
-
-    fields.map { f =>
-      val present = presentIn.getOrElse(f.name, 0L)
-      val nonNull = countsRow.getAs[Long](f.name)
-      val nullable = present < total || nonNull < present
-      f.name -> FieldStats(Seq(pythonTypeName(f.dataType)), nullable, present)
-    }.toMap
-  }
 
   /** SURVEY D-4 — fixed Spark-type → Python-type-name mapping. */
   def pythonTypeName(dt: DataType): String = dt match {

@@ -1,5 +1,7 @@
 package graft.server
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ArrayNode
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -23,8 +25,8 @@ import graft.etl.{Json, Pipeline}
   *     a schema walk on Spark, SURVEY §2.4 A5 — no data pass needed).
   *
   * JDK built-in httpserver: no new dependency under the offline build
-  * (SURVEY §7.5). The HTTP layer lives on the driver; only the two Spark
-  * actions (inference + collect) touch executors.
+  * (SURVEY §7.5). The HTTP layer lives on the driver; only the pipeline's
+  * statistics job and the collect of the rows touch executors.
   */
 object Api {
 
@@ -49,9 +51,12 @@ object Api {
     }.toMap
 
   /** S9 — row serialization with nulls kept and scalars typed. */
-  def rowsToJson(df: DataFrame): String = {
-    val m = Json.mapper
-    val arr = m.createArrayNode()
+  def rowsToJson(df: DataFrame): String = Json.mapper.writeValueAsString(rowsToJsonNode(df))
+
+  /** The rows of [[rowsToJson]] as a Jackson array, for responses that
+    * embed them. */
+  def rowsToJsonNode(df: DataFrame): ArrayNode = {
+    val arr = Json.mapper.createArrayNode()
     val fields = df.schema.fields
     df.collect().foreach { row =>
       val o = arr.addObject()
@@ -77,7 +82,7 @@ object Api {
         }
       }
     }
-    m.writeValueAsString(arr)
+    arr
   }
 
   /** app_simple.py response shape: everything stringified, plus a summary
@@ -90,8 +95,8 @@ object Api {
     root.put("success", true)
     try {
       val frame = if (result.totalItems == 0) result.frame else stringifyAll(result.frame)
-      root.set[com.fasterxml.jackson.databind.JsonNode]("data",
-        if (result.totalItems == 0) m.createArrayNode() else m.readTree(rowsToJson(frame)))
+      root.set[JsonNode]("data",
+        if (result.totalItems == 0) m.createArrayNode() else rowsToJsonNode(frame))
       val summary = root.putObject("summary")
       summary.put("records", result.totalItems)
       summary.put("columns", if (result.totalItems == 0) 0 else frame.columns.length)
@@ -107,11 +112,10 @@ object Api {
       val root = m.createObjectNode()
       root.put("success", true)
       if (result.totalItems == 0) {
-        root.set[com.fasterxml.jackson.databind.JsonNode]("data", m.createArrayNode())
-        root.set[com.fasterxml.jackson.databind.JsonNode]("types", m.createObjectNode())
+        root.set[JsonNode]("data", m.createArrayNode())
+        root.set[JsonNode]("types", m.createObjectNode())
       } else {
-        root.set[com.fasterxml.jackson.databind.JsonNode]("data",
-          m.readTree(rowsToJson(result.frame)))
+        root.set[JsonNode]("data", rowsToJsonNode(result.frame))
         val types = root.putObject("types")
         columnTypes(result.frame).toSeq.sortBy(_._1).foreach { case (k, v) => types.put(k, v) }
       }

@@ -40,10 +40,11 @@ object Watch {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+        // from the path column alone, so binaryFile prunes the content
+        val fileNames = batch.select("path").as[String].collect()
         val files = batch.select("path", "content")
           .as[(String, Array[Byte])]
           .map { case (p, b) => (p, Pipeline.decodeWithFallback(b)) }
-        val fileNames = files.select("_1").as[String].collect()
         if (fileNames.nonEmpty) {
           val start = java.time.Instant.now().toString
           val result = Pipeline.process(spark, files)
